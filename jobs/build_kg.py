@@ -6,7 +6,8 @@ Usage:
         --input /path/transcripts.parquet --output /path/kg \
         [--buckets 32] [--master local[8]] [--no-resume]
 
-Prints a single JSON summary line (run id, snapshot, counts, wall seconds).
+Prints a single JSON summary line (run id, snapshot, counts, phase timings,
+the decisions the build made, wall seconds).
 """
 
 from __future__ import annotations

@@ -25,8 +25,9 @@ Layout:
     reference_extract.py  the pure-Python *spec* extractor (the oracle used
                           by tests; analog of feedparser being its own spec)
     datagen.py            deterministic synthetic transcript corpus
-    operators/            Spark operators: extract, canonicalize (LSH),
-                          connected components, dedupe, similarity
+    operators/            Spark operators: extract, canonicalize (driver
+                          Jaccard join or LSH), connected components,
+                          dedupe, similarity
     plans/pipeline.py     end-to-end build_kg with lineage + resume
     plans/validate.py     post-build integrity audit
     plans/compact.py, plans/expire.py  lifecycle: compaction, expiry, rollback

@@ -1,8 +1,10 @@
 """build_kg — the flagship end-to-end plan.
 
 transcripts -> dedupe(first-wins) -> extract(mapInPandas) -> canonicalize
-(broadcast alias join + MinHash-LSH + connected components) -> triples /
-vertices / edges / metrics, with per-bucket lineage and resume.
+(alias dictionary + exact prefix-filtered Jaccard + union-find on the driver
+below a distinct-surface cutoff; broadcast alias join + MinHash-LSH +
+connected components above it) -> triples / vertices / edges / metrics,
+with per-bucket lineage and resume.
 
 The four outputs are the analogs of the reference's item records, meta
 record, and errors side channel (SURVEY.md §1.3); 'meta before items'
@@ -518,7 +520,11 @@ def build_kg(
     max_text_bytes: int | None = MAX_TEXT_BYTES,
     strict_ingest: bool = False,
 ) -> dict:
-    """Run the full pipeline.  Returns a summary dict (counts, snapshot).
+    """Run the full pipeline.  Returns a summary dict (counts, snapshot,
+    phase timings, and ``decisions``: the canonicalize path taken —
+    "driver" or "distributed" — with the number of distinct surfaces it
+    was chosen on (LOCAL_SURFACES + 1 past the cutoff), and whether the
+    triples write kept the clustered layout).
 
     fail_fast / normalize are the reference's resume_saxerror:false and
     normalize:false option toggles, threaded to extract_triples;
@@ -658,10 +664,12 @@ def build_kg(
         .groupBy("surface")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
     )
-    # canonicalize() materializes extraction eagerly (the connected-
-    # components edge set is localCheckpoint'ed), so time it as a phase
+    # canonicalize() materializes extraction eagerly (its first job
+    # collects the distinct surfaces, filling the extraction cache), so
+    # time it as a phase
     t0 = time.monotonic()
-    mapping, vertices = canonicalize(spark, surfaces)
+    decisions: dict = {}
+    mapping, vertices = canonicalize(spark, surfaces, decisions)
     mapping.cache()
     phases["extract_canonicalize"] = round(time.monotonic() - t0, 2)
 
@@ -696,6 +704,7 @@ def build_kg(
     # write and the triples need no second shuffle; past the gate the join
     # may shuffle, so the write falls back to the salted repartition
     clustered_write = est_bytes <= 64 * 1024 * 1024
+    decisions["clustered_write"] = clustered_write
     if clustered_write:
         m_subj, m_obj = F.broadcast(m_subj), F.broadcast(m_obj)
     # the partition hash has only n_buckets distinct values — precompute on
@@ -948,6 +957,7 @@ def build_kg(
         "skipped_buckets": skipped,
         "output_dir": output_dir,
         "phases": phases,
+        "decisions": decisions,
     }
     if ingest_warning:
         summary["ingest_warning"] = ingest_warning

@@ -1,8 +1,18 @@
-"""Distributed canonicalization (LSH + CC) vs the exact pure-Python oracle."""
+"""Canonicalization — the driver path (prefix-filtered Jaccard + union-find)
+and the distributed path (LSH + CC) — vs the exact pure-Python oracle."""
 
-from pyspark.sql import functions as F
+import random
+import string
+from collections import Counter
 
+import pytest
+
+from node_feedparser_spark.functions.normalize import char_shingles, jaccard
+from node_feedparser_spark.operators import canonicalize as canon
 from node_feedparser_spark.operators.canonicalize import (
+    MAPPING_SCHEMA,
+    VERTICES_SCHEMA,
+    _canonicalize_dist,
     canonicalize,
     lsh_candidate_pairs,
 )
@@ -96,30 +106,135 @@ def test_lsh_finds_fuzzy_pairs(spark):
     assert ("kubernetes", "kuberrnetes") in pairs
 
 
-def test_canonicalize_matches_oracle(spark, corpus_pdf):
-    """The distributed grouping must equal the exact O(n^2) oracle grouping
-    on the fixture corpus (same partition of surface forms, same entity IDs,
-    same canonical names)."""
-    ref = extract_corpus(corpus_pdf.to_dict("records"))
-    oracle_ids, oracle_vertices = canonicalize_entities(ref.triples)
-
-    counts: dict[str, int] = {}
-    for t in ref.triples:
-        for s in (t["subj"], t["obj"]):
-            counts[s] = counts.get(s, 0) + 1
-    surfaces = spark.createDataFrame(
+def _surfaces(spark, triples):
+    counts = Counter(s for t in triples for s in (t["subj"], t["obj"]))
+    return spark.createDataFrame(
         sorted(counts.items()), "surface string, n_mentions long"
     )
-    mapping, vertices = canonicalize(spark, surfaces)
-    got_ids = {r.surface: r.entity_id for r in mapping.collect()}
-    assert got_ids == oracle_ids
 
-    got_v = {
-        r.entity_id: (r.canonical_name, tuple(r.aliases), r.n_mentions)
-        for r in vertices.collect()
-    }
-    want_v = {
-        v["entity_id"]: (v["canonical_name"], tuple(v["aliases"]), v["n_mentions"])
-        for v in oracle_vertices
-    }
-    assert got_v == want_v
+
+def _rows(mapping, vertices):
+    rows = mapping.collect()
+    assert len({r.surface for r in rows}) == len(rows)  # one row per surface
+    return (
+        {r.surface: r.entity_id for r in rows},
+        {
+            r.entity_id: (r.canonical_name, tuple(r.aliases), r.n_mentions)
+            for r in vertices.collect()
+        },
+    )
+
+
+def _assert_paths_match_oracle(spark, triples, want_path="driver"):
+    """canonicalize() (taking `want_path`) and the distributed path give the
+    same mapping and vertices — rows and schemas — and both equal the
+    exact O(n^2) oracle grouping."""
+    surfaces = _surfaces(spark, triples)
+    decisions = {}
+    got = canonicalize(spark, surfaces, decisions)
+    assert decisions["canonicalize"] == want_path
+    dist = _canonicalize_dist(spark, surfaces)
+    assert got[0].schema == dist[0].schema == MAPPING_SCHEMA
+    assert got[1].schema == dist[1].schema == VERTICES_SCHEMA
+
+    oracle_ids, oracle_vertices = canonicalize_entities(triples)
+    want = (
+        oracle_ids,
+        {
+            v["entity_id"]: (
+                v["canonical_name"], tuple(v["aliases"]), v["n_mentions"]
+            )
+            for v in oracle_vertices
+        },
+    )
+    assert _rows(*got) == _rows(*dist) == want
+    return want
+
+
+def _mentions(surfaces, conv="conv:c0"):
+    return [{"subj": conv, "obj": s} for s in surfaces]
+
+
+def test_canonicalize_matches_oracle(spark, corpus_pdf):
+    """On the fixture corpus both paths equal the exact oracle grouping
+    (same partition of surface forms, same entity IDs, same canonical
+    names)."""
+    ref = extract_corpus(corpus_pdf.to_dict("records"))
+    _assert_paths_match_oracle(spark, ref.triples)
+
+
+def _planted():
+    """Planted entities, each named as-is, in UPPER case and with one
+    doubled letter, mentioned a varying number of times."""
+    rng = random.Random(7)
+    triples = []
+    for e in range(40):
+        base = "".join(rng.choice(string.ascii_lowercase) for _ in range(8))
+        base = base.capitalize()
+        i = rng.randrange(len(base))
+        for v, surface in enumerate((base, base.upper(), base[:i] + base[i:i + 1] + base[i:])):
+            triples += _mentions([surface] * (1 + (e + v) % 3), conv=f"conv:c{e}")
+    return triples
+
+
+def _pseudo_collision():
+    """'tool:'/'conv:' surfaces whose keys equal mention keys, one of them
+    in a fuzzy-merged component: exact-key merges pull them in."""
+    return _mentions(["Tool Kubernetes", "Tool Kubernettes", "Conv C1"]) + [
+        {"subj": "conv:c1", "pred": "invokes", "obj": "tool:kubernetes"},
+    ]
+
+
+def _boundary_keys():
+    """(short, long): the long key has 100 distinct shingles, the short
+    key's 55 are a subset of them, so their Jaccard is exactly
+    55/100 = 11/20 = 0.55."""
+    rng = random.Random(3)
+    while True:
+        chars = "".join(rng.choice(string.ascii_lowercase) for _ in range(99))
+        short, long = chars[:55], chars[:55] + " " + chars[55:]
+        a, b = char_shingles(short), char_shingles(long)
+        if len(a) == 55 and len(b) == 100 and a <= b:
+            return short, long
+
+
+def _jaccard_boundary():
+    """A key pair at Jaccard exactly 0.55.  The long key's 45 own shingles
+    rank rarest, so its prefix must reach the 46th: a bound from float
+    math.ceil(0.55 * 100) = 56 (not 55) keeps 45 and misses the pair."""
+    return _mentions(_boundary_keys())
+
+
+@pytest.mark.parametrize(
+    "make", [_planted, _pseudo_collision, _jaccard_boundary],
+    ids=["planted", "pseudo_collision", "jaccard_boundary"],
+)
+def test_canonicalize_paths_agree(spark, make):
+    ids, vertices = _assert_paths_match_oracle(spark, make())
+    if make is _jaccard_boundary:
+        a, b = map(char_shingles, _boundary_keys())
+        assert jaccard(a, b) == 0.55 and len(vertices) == 2  # pair + conv
+    if make is _pseudo_collision:
+        assert ids["tool:kubernetes"] == ids["Tool Kubernettes"]
+        assert ids["conv:c1"] == ids["Conv C1"]
+
+
+def test_canonicalize_empty_surfaces(spark):
+    surfaces = spark.createDataFrame([], "surface string, n_mentions long")
+    decisions = {}
+    mapping, vertices = canonicalize(spark, surfaces, decisions)
+    assert decisions == {"canonicalize": "driver", "surfaces": 0}
+    assert mapping.schema == MAPPING_SCHEMA and mapping.count() == 0
+    assert vertices.schema == VERTICES_SCHEMA and vertices.count() == 0
+
+
+def test_canonicalize_above_cutoff_routes_distributed(spark, corpus_pdf, monkeypatch):
+    """Past LOCAL_SURFACES the distributed path runs, with the same result."""
+    monkeypatch.setattr(canon, "LOCAL_SURFACES", 10)
+    ref = extract_corpus(corpus_pdf.to_dict("records"))
+    surfaces = _surfaces(spark, ref.triples)
+    decisions = {}
+    got = _rows(*canonicalize(spark, surfaces, decisions))
+    assert decisions == {"canonicalize": "distributed", "surfaces": 11}
+    monkeypatch.undo()
+    assert got == _rows(*canonicalize(spark, surfaces))

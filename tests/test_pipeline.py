@@ -9,9 +9,44 @@ from node_feedparser_spark.reference_extract import extract_corpus
 from node_feedparser_spark.sources.transcripts import snapshot_id
 
 
+# Spark jobs one fixture build runs (77 when canonicalization ran as a
+# dozen distributed stages; 25 since the surface set is canonicalized on the
+# driver): a reintroduced per-stage path fails here, not only in perfbench
+BUILD_JOB_BUDGET = 25
+
+
+def _count_jobs(spark, fn):
+    """Run fn(); return its result and the number of Spark jobs started
+    meanwhile, from any thread — job ids are global and sequential, so the
+    count is the id gap between two marker jobs of one job group."""
+    sc = spark.sparkContext
+    group = "test-job-budget"
+
+    def marker() -> int:
+        sc.parallelize([0], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, "job budget")
+    try:
+        start = marker()
+        out = fn()
+        return out, marker() - start - 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_build_kg_end_to_end(spark, corpus_path, corpus_pdf, tmp_path):
     out = str(tmp_path / "kg")
-    summary = build_kg(spark, corpus_path, out, n_buckets=8)
+    summary, n_jobs = _count_jobs(
+        spark, lambda: build_kg(spark, corpus_path, out, n_buckets=8)
+    )
+    assert summary["decisions"] == {
+        "canonicalize": "driver",
+        "surfaces": 238,
+        "clustered_write": True,
+    }
+    assert n_jobs <= BUILD_JOB_BUDGET, n_jobs
     assert summary["n_triples"] > 0
     assert summary["n_vertices"] > 0
     assert summary["n_edges"] > 0
