@@ -7,7 +7,9 @@ Usage:
         [--buckets 32] [--master local[8]] [--no-resume]
 
 Prints a single JSON summary line (run id, snapshot, counts, phase timings,
-the decisions the build made, wall seconds).
+wall seconds, and the decisions the build made: the canonicalize path and
+surface count, mapping_bytes and clustered_write, input_bytes and the
+exchange_partitions sized from them).
 """
 
 from __future__ import annotations

@@ -275,14 +275,51 @@ def canonicalize(
     surfaces collected ("surfaces": the exact count on the driver path,
     LOCAL_SURFACES + 1 — a lower bound — past the cutoff).
     """
+    pdf = _route(surfaces, decisions)
+    if pdf is not None:
+        return _canonicalize_local(spark, pdf)
+    return _canonicalize_dist(spark, surfaces)
+
+
+def canonicalize_sized(
+    spark: SparkSession, surfaces: DataFrame, decisions: dict | None = None
+):
+    """canonicalize() plus the mapping's estimated in-memory size
+    (mapping_bytes()), for a caller that gates a broadcast on it:
+    (mapping, vertices, mapping_bytes).  The driver path sizes the frame it
+    collected at no cost; the distributed path returns its mapping cached
+    and sizes it with one aggregate job — the caller's joins read that
+    cache, and the caller unpersists it."""
+    pdf = _route(surfaces, decisions)
+    if pdf is not None:
+        n_bytes = mapping_bytes(len(pdf), int(pdf["surface"].str.len().sum()))
+        return (*_canonicalize_local(spark, pdf), n_bytes)
+    mapping, vertices = _canonicalize_dist(spark, surfaces)
+    mapping = mapping.cache()
+    stats = mapping.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(F.sum(F.length("surface")), F.lit(0)).alias("chars"),
+    ).collect()[0]
+    n_bytes = mapping_bytes(int(stats["rows"]), int(stats["chars"]))
+    return mapping, vertices, n_bytes
+
+
+def _route(surfaces: DataFrame, decisions: dict | None) -> pd.DataFrame | None:
+    """The routing job: the collected surfaces when they fit the cutoff
+    (driver path), else None (distributed path)."""
     pdf = surfaces.limit(LOCAL_SURFACES + 1).toPandas()
     on_driver = len(pdf) <= LOCAL_SURFACES
     if decisions is not None:
         decisions["canonicalize"] = "driver" if on_driver else "distributed"
         decisions["surfaces"] = len(pdf)
-    if on_driver:
-        return _canonicalize_local(spark, pdf)
-    return _canonicalize_dist(spark, surfaces)
+    return pdf if on_driver else None
+
+
+def mapping_bytes(rows: int, surface_chars: int) -> int:
+    """Estimated in-memory size of a broadcast (surface -> entity_id) hash
+    relation: the surface strings plus ~48 B/row of object and hash
+    overhead."""
+    return surface_chars + 48 * rows
 
 
 def _canonicalize_local(spark: SparkSession, pdf: pd.DataFrame):

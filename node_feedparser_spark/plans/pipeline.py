@@ -24,6 +24,18 @@ Scale design:
   physical clustering, so in the common branch the partitioned triples
   write runs with NO repartition of the ~3x-larger triple payload (the
   old second shuffle was the measured write-phase scaling residual).
+- the exchange is sized to the input (exchange_partitions): an input of
+  at most `cores` scan splits (maxPartitionBytes each) gets one partition
+  per core, any larger one the full n_buckets * sub.  Every extraction
+  task pays a fixed Python-worker start-up (~0.25 CPU-s), so a small
+  input or a small incremental ingest runs `cores` tasks, not
+  n_buckets * sub of them.
+- one corpus-sized cache: the extraction output.  In the broadcast branch
+  the triples are NOT cached — the write and both aggregates re-derive
+  them from the cached extraction with two broadcast probes.
+- lineage rows come from ONE collected aggregate (lineage_counts: the
+  per-bucket turn, error and score-histogram counts), built into the
+  metrics rows on the driver and appended as a local relation.
 - resume: committed (snapshot_id, bucket) pairs read from the metrics table
   are anti-joined away from the input — a restart recomputes only missing
   buckets (reference analog: checkpointed incremental emission).
@@ -47,6 +59,9 @@ Scale design:
   warehouse (pinned by tests/test_crash_recovery.py).
 - the score histogram per bucket uses a fixed-width bucketing groupBy —
   a map-side-combinable aggregation, not a sketch, so it is deterministic.
+- the metrics table is read with its declared schema, once per build:
+  a metrics dir holding no data file (a crash inside the first commit
+  leaves only `_temporary/`) reads as no commits.
 """
 
 from __future__ import annotations
@@ -55,18 +70,21 @@ import os
 import sys
 import time
 import uuid
+from collections import defaultdict
+
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import canonicalize
+from ..operators.canonicalize import canonicalize_sized
 from ..operators.extract import (
     ERROR_PRED,
     MAX_TEXT_BYTES,
     dedupe_first_wins,
     extract_triples,
 )
-from ..sources.transcripts import read_transcripts, snapshot_id
+from ..sources.transcripts import read_transcripts, snapshot
 from ..schemas import METRICS
 
 DEFAULT_BUCKETS = 32
@@ -346,14 +364,31 @@ WRITE_SALT = 0x5A17
 
 
 def write_sub(n_buckets: int, par: int) -> int:
-    """Sub-splits per bucket so write-stage groups >= 4x parallelism: the
-    scheduler load-balances regardless of hash collisions, and files per
-    bucket stay bounded by `sub`, not by task count."""
+    """Sub-splits (salts) per bucket so a large input's exchange has
+    n_buckets * sub >= 4x parallelism groups: the scheduler load-balances
+    regardless of hash collisions, a mega-thread spreads over `sub` tasks,
+    and files per bucket stay bounded by `sub`, not by task count."""
     return max(1, -(-4 * par // n_buckets))
 
 
+def exchange_partitions(
+    n_buckets: int, sub: int, par: int, input_bytes: int,
+    max_partition_bytes: int,
+) -> int:
+    """Partitions of the fused corpus exchange.  An input that the scan
+    would read in at most `par` splits of `max_partition_bytes` runs `par`
+    tasks, one per core: each extraction task costs a fixed Python worker
+    start-up (~0.25 CPU-s) whatever its size, and such an input is all
+    fixed cost.  Any larger input keeps the full n_buckets * sub fan-out,
+    whose >= 4x groups per core balance load against hash collisions
+    (write_sub)."""
+    if input_bytes <= par * max_partition_bytes:
+        return par
+    return n_buckets * sub
+
+
 def fuse_write_partitioning(
-    raw: DataFrame, n_buckets: int, sub: int
+    raw: DataFrame, n_buckets: int, sub: int, n_partitions: int
 ) -> DataFrame:
     """ONE exchange that serves both the first-wins dedupe and the bucketed
     triples write (round 3 — this was the write phase's scaling residual:
@@ -368,7 +403,9 @@ def fuse_write_partitioning(
     - a mega-thread spreads across all `sub` salts of its bucket instead of
       landing in one task (the old write salt put each conversation in
       exactly ONE write task; this is strictly better),
-    - a bucket's rows live in at most `sub` partitions, so files per bucket
+    - a bucket's rows live in at most `sub` partitions — whatever
+      `n_partitions` is (exchange_partitions; fewer partitions than
+      buckets only packs several buckets per task) — so files per bucket
       stay bounded by `sub` even with NO pre-write repartition: extraction
       (mapInPandas) and the forced-broadcast mapping joins are
       partition-preserving, so the clustering laid down here physically
@@ -387,7 +424,7 @@ def fuse_write_partitioning(
             F.xxhash64(F.lit(WRITE_SALT), "conv_id", "turn_idx"), F.lit(sub)
         ).cast("int"),
     )
-    return salted.repartition(n_buckets * sub, "bucket", "wsalt")
+    return salted.repartition(n_partitions, "bucket", "wsalt")
 
 
 def triples_clustered_frame(
@@ -486,27 +523,89 @@ def partition_hash(snap: str, n_buckets: int, bucket: int) -> str:
     return hashlib.sha1(f"{snap}:{n_buckets}:{bucket}".encode()).hexdigest()
 
 
-def committed_buckets(
-    spark: SparkSession, metrics_path: str, snap: str, n_buckets: int
-) -> list[int]:
+def committed_partitions(
+    spark: SparkSession, metrics_path: str
+) -> set[tuple[str, str]]:
+    """Every (snapshot_id, partition_hash) pair the metrics table has
+    committed.  Read with the declared METRICS schema, not inferred: a
+    metrics dir holding no data file — exactly what a crash inside the
+    first commit leaves, only `_temporary/` — reads as no commits instead
+    of failing schema inference on every rerun."""
     if not os.path.isdir(metrics_path):
-        return []
-    expected = {partition_hash(snap, n_buckets, b): b for b in range(n_buckets)}
-    try:
-        rows = (
-            spark.read.parquet(metrics_path)
-            .filter(F.col("snapshot_id") == snap)
-            .select("partition_hash")
-            .distinct()
-            .collect()
+        return set()
+    rows = (
+        spark.read.schema(METRICS)
+        .parquet(metrics_path)
+        .select("snapshot_id", "partition_hash")
+        .collect()
+    )
+    return {(r["snapshot_id"], r["partition_hash"]) for r in rows}
+
+
+def snapshot_buckets(
+    commits: set[tuple[str, str]], snap: str, n_buckets: int
+) -> list[int]:
+    """Buckets of `snap` under this n_buckets that `commits`
+    (committed_partitions) holds."""
+    return [
+        b for b in range(n_buckets)
+        if (snap, partition_hash(snap, n_buckets, b)) in commits
+    ]
+
+
+def lineage_counts(
+    triples: DataFrame, errors: DataFrame, turn_counts: DataFrame
+) -> DataFrame:
+    """The per-bucket lineage counts as ONE bucket-keyed frame (kind,
+    bucket, score_bucket, n), a union of three map-side-combinable
+    aggregates: triples per (bucket, fixed-width 0.1 score bucket), error
+    rows per bucket, and the deduped turn counts.  Its row count is
+    O(n_buckets * 10), so build_kg collects it and builds the metrics rows
+    on the driver (lineage_rows)."""
+    none = F.lit(None).cast("double").alias("score_bucket")
+    hist = triples.groupBy(
+        "bucket",
+        F.round(F.floor(F.col("score") * 10) / 10.0, 1).alias("score_bucket"),
+    ).agg(F.count(F.lit(1)).alias("n"))
+    errs = errors.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        hist.select(F.lit("triples").alias("kind"), "bucket", "score_bucket", "n")
+        .unionByName(errs.select(F.lit("errors").alias("kind"), "bucket", none, "n"))
+        .unionByName(
+            turn_counts.select(
+                F.lit("turns").alias("kind"), "bucket", none,
+                F.col("n_turns").alias("n"),
+            )
         )
-        return sorted(
-            expected[r["partition_hash"]]
-            for r in rows
-            if r["partition_hash"] in expected
-        )
-    except Exception:
-        return []
+    )
+
+
+def lineage_rows(
+    counts: list, run_id: str, snap: str, n_buckets: int, run_buckets: list[int]
+) -> pd.DataFrame:
+    """The metrics rows (METRICS columns) of one run from the collected
+    lineage_counts: one row per RUN bucket, driven from the bucket list
+    rather than the data — a bucket holding no rows still commits (zero
+    counts, empty histogram), so its graph_state hash has a metrics row and
+    a resume skips it.  The histogram is sorted by score bucket."""
+    turns: dict[int, int] = {}
+    errs: dict[int, int] = {}
+    hist: dict[int, list] = defaultdict(list)
+    for kind, bucket, score_bucket, n in counts:
+        if kind == "triples":
+            hist[bucket].append((score_bucket, n))
+        elif kind == "errors":
+            errs[bucket] = n
+        else:
+            turns[bucket] = n
+    rows = []
+    for b in run_buckets:
+        h = sorted(hist[b])
+        rows.append((
+            run_id, partition_hash(snap, n_buckets, b), snap, b,
+            turns.get(b, 0), sum(c for _, c in h), errs.get(b, 0), h,
+        ))
+    return pd.DataFrame(rows, columns=METRICS.names)
 
 
 def build_kg(
@@ -523,8 +622,10 @@ def build_kg(
     """Run the full pipeline.  Returns a summary dict (counts, snapshot,
     phase timings, and ``decisions``: the canonicalize path taken —
     "driver" or "distributed" — with the number of distinct surfaces it
-    was chosen on (LOCAL_SURFACES + 1 past the cutoff), and whether the
-    triples write kept the clustered layout).
+    was chosen on (LOCAL_SURFACES + 1 past the cutoff), the mapping's
+    estimated size in bytes and whether the triples write kept the
+    clustered layout on that basis, the input's file bytes and the
+    partition count of the corpus exchange sized from them).
 
     fail_fast / normalize are the reference's resume_saxerror:false and
     normalize:false option toggles, threaded to extract_triples;
@@ -534,7 +635,7 @@ def build_kg(
     a changed-datagen corpus landing in an old output dir, which would
     fail validate_kg's triples_pk_unique post-hoc) from a warning +
     ``ingest_warning`` summary key to a refusal."""
-    snap = snapshot_id(input_path)
+    snap, input_bytes = snapshot(input_path)
     run_id = f"run-{uuid.uuid4().hex[:12]}"
     triples_path = os.path.join(output_dir, "triples")
     vertices_path = os.path.join(output_dir, "vertices")
@@ -561,16 +662,14 @@ def build_kg(
     # and those buckets are exactly where the colliding conv_ids live
     raw_unpruned = raw
 
+    # the committed (snapshot_id, partition_hash) pairs, read once: they
+    # serve the resume skip, the different-n_buckets refusal and the
+    # ingest guard's other-snapshot probe below
+    commits = committed_partitions(spark, metrics_path)
     skipped: list[int] = []
-    if resume and os.path.isdir(metrics_path):
-        skipped = committed_buckets(spark, metrics_path, snap, n_buckets)
-        prior = (
-            spark.read.parquet(metrics_path)
-            .filter(F.col("snapshot_id") == snap)
-            .select("partition_hash")
-            .distinct()
-            .count()
-        )
+    if resume:
+        skipped = snapshot_buckets(commits, snap, n_buckets)
+        prior = sum(1 for s, _ in commits if s == snap)
         if prior > len(skipped):
             # same input committed under a different bucketing: recomputing
             # would append duplicates. Refuse instead of corrupting output.
@@ -593,37 +692,30 @@ def build_kg(
     # split ingests (disjoint conv sets, test_graph_merge) pay the probe
     # and pass silently.
     ingest_warning = None
-    if os.path.isdir(metrics_path) and os.path.isdir(triples_path):
-        has_other = (
-            spark.read.parquet(metrics_path)
-            .filter(F.col("snapshot_id") != snap)
+    if os.path.isdir(triples_path) and any(s != snap for s, _ in commits):
+        prior_convs = (
+            spark.read.parquet(triples_path)
+            .filter(F.col("snap") != snap)
+            .select("conv_id")
+        )
+        overlap = (
+            raw_unpruned.select("conv_id")
+            .join(prior_convs, "conv_id", "left_semi")
             .limit(1)
             .count()
         )
-        if has_other:
-            prior_convs = (
-                spark.read.parquet(triples_path)
-                .filter(F.col("snap") != snap)
-                .select("conv_id")
+        if overlap:
+            ingest_warning = (
+                f"incoming snapshot {snap} shares conv_ids with "
+                f"previously committed snapshots in {output_dir}: the "
+                f"same conversations were re-ingested with different "
+                f"content, and the merged graph will fail the "
+                f"triples_pk_unique audit. Expire or roll back the old "
+                f"snapshot first, or use a fresh output dir."
             )
-            overlap = (
-                raw_unpruned.select("conv_id")
-                .join(prior_convs, "conv_id", "left_semi")
-                .limit(1)
-                .count()
-            )
-            if overlap:
-                ingest_warning = (
-                    f"incoming snapshot {snap} shares conv_ids with "
-                    f"previously committed snapshots in {output_dir}: the "
-                    f"same conversations were re-ingested with different "
-                    f"content, and the merged graph will fail the "
-                    f"triples_pk_unique audit. Expire or roll back the old "
-                    f"snapshot first, or use a fresh output dir."
-                )
-                if strict_ingest:
-                    raise ValueError(ingest_warning)
-                print(f"WARNING: {ingest_warning}", file=sys.stderr)
+            if strict_ingest:
+                raise ValueError(ingest_warning)
+            print(f"WARNING: {ingest_warning}", file=sys.stderr)
 
     # ONE corpus shuffle for dedupe + write (fuse_write_partitioning): the
     # (bucket, wsalt) exchange satisfies the prefixed dedupe window's
@@ -632,8 +724,12 @@ def build_kg(
     # write, which then needs no repartition of the triple payload.
     par = spark.sparkContext.defaultParallelism
     sub = write_sub(n_buckets, par)
+    n_partitions = exchange_partitions(
+        n_buckets, sub, par, input_bytes,
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes(),
+    )
     turns = dedupe_first_wins(
-        fuse_write_partitioning(raw, n_buckets, sub),
+        fuse_write_partitioning(raw, n_buckets, sub, n_partitions),
         partition_prefix=("bucket", "wsalt"),
     )
     # n_turns = rows surviving first-wins dedupe = distinct (conv_id,
@@ -664,13 +760,16 @@ def build_kg(
         .groupBy("surface")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
     )
-    # canonicalize() materializes extraction eagerly (its first job
+    # canonicalize_sized() materializes extraction eagerly (its first job
     # collects the distinct surfaces, filling the extraction cache), so
     # time it as a phase
     t0 = time.monotonic()
-    decisions: dict = {}
-    mapping, vertices = canonicalize(spark, surfaces, decisions)
-    mapping.cache()
+    decisions: dict = {
+        "input_bytes": input_bytes,
+        "exchange_partitions": n_partitions,
+    }
+    mapping, vertices, n_bytes = canonicalize_sized(spark, surfaces, decisions)
+    decisions["mapping_bytes"] = n_bytes
     phases["extract_canonicalize"] = round(time.monotonic() - t0, 2)
 
     m_subj = mapping.withColumnRenamed("surface", "subj").withColumnRenamed(
@@ -683,43 +782,28 @@ def build_kg(
     # surfaces ≪ mentions, so the surface->entity mapping usually fits a
     # broadcast (no shuffle/sort of the full triple set, measured 2x on the
     # join+write path).  The gate is an ESTIMATED BYTE size, not a row
-    # count: one agg job over the cached mapping yields (rows, total
-    # surface bytes); the in-memory hash relation costs roughly
-    # string bytes + ~48 B/row of object+hash overhead.  Broadcasting is
-    # forced only under 64 MB estimated — far below executor budgets even
-    # with the 2x hint (subj + obj).  Past the gate we do NOT hint and let
-    # AQE convert the join at runtime if the post-shuffle size qualifies;
-    # the worst case is a sort-merge join that shuffles the triple set
-    # twice (subj then obj) — correct, just ~2x slower on the join+write
-    # path at fixture scale.
-    t0 = time.monotonic()
-    stats = mapping.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.coalesce(F.sum(F.length("surface")), F.lit(0)).alias("surface_bytes"),
-    ).collect()[0]
-    phases["mapping_stats"] = round(time.monotonic() - t0, 2)
-    est_bytes = int(stats["surface_bytes"]) + 48 * int(stats["rows"])
-    # forced-broadcast joins are partition-preserving, so the (bucket,
+    # count: canonicalize_sized returns it (string bytes + ~48 B/row of
+    # object+hash overhead), from the frame the driver path collected or
+    # from one aggregate over the distributed path's cached mapping.
+    # Broadcasting is forced only under 64 MB estimated — far below
+    # executor budgets even with the 2x hint (subj + obj).  Past the gate we do NOT hint and let AQE convert the join at
+    # runtime if the post-shuffle size qualifies; the worst case is a
+    # sort-merge join that shuffles the triple set twice (subj then obj) —
+    # correct, just ~2x slower on the join+write path at fixture scale.
+    # Forced-broadcast joins are partition-preserving, so the (bucket,
     # wsalt) clustering from fuse_write_partitioning still holds at the
     # write and the triples need no second shuffle; past the gate the join
     # may shuffle, so the write falls back to the salted repartition
-    clustered_write = est_bytes <= 64 * 1024 * 1024
+    clustered_write = n_bytes <= 64 * 1024 * 1024
     decisions["clustered_write"] = clustered_write
     if clustered_write:
         m_subj, m_obj = F.broadcast(m_subj), F.broadcast(m_obj)
-    # the partition hash has only n_buckets distinct values — precompute on
-    # the driver (same sha1 as partition_hash()) and look it up by bucket
-    # index instead of re-hashing per triple (~30 M redundant sha1s at the
-    # bench scale, pure wasted CPU in the write stage)
-    bucket_hash = F.array(
-        *[F.lit(partition_hash(snap, n_buckets, b)) for b in range(n_buckets)]
-    )
     # NOTE lineage/snap are NOT part of this frame: both are per-row
     # constants derivable from `bucket`, and attaching them here would (a)
     # ship ~90 B/row of redundant low-cardinality strings through the
     # write's repartition shuffle — roughly doubling shuffle bytes on rows
-    # whose real payload is ~100-130 B — and (b) bloat the cache the edge/
-    # metrics aggregates re-read.  _write_triples attaches them AFTER the
+    # whose real payload is ~100-130 B — and (b) bloat the fallback
+    # branch's triples cache.  _write_triples attaches them AFTER the
     # exchange, where they cost one dictionary-encoded parquet column.
     triples = (
         triples_ok.join(m_subj, "subj")
@@ -729,7 +813,12 @@ def build_kg(
             "subj_id", "obj_id", "bucket",
         )
     )
-    triples.cache()
+    # the broadcast branch keeps ONE corpus-sized cache, the extraction:
+    # the write and the aggregates each re-derive the triples from it with
+    # two broadcast hash probes, cheaper than caching a second copy.  The
+    # fallback branch's joins shuffle, so there the triples are cached
+    if not clustered_write:
+        triples.cache()
 
     edges = (
         triples.groupBy("subj_id", "pred", "obj_id")
@@ -740,59 +829,17 @@ def build_kg(
         )
     )
 
-    # --- metrics: per-bucket lineage + fixed-width link-score histogram
-    hist = (
-        triples.withColumn("score_bucket", F.round(F.floor(F.col("score") * 10) / 10.0, 1))
-        .groupBy("bucket", "score_bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("score_bucket").alias("bucket"),
-                        F.col("cnt").alias("count"),
-                    )
-                )
-            ).alias("link_score_hist"),
-            F.sum("cnt").alias("n_triples"),
-        )
-    )
-    err_counts = errors.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_errors"))
-    # one lineage row per RUN bucket, driven from the bucket list rather
-    # than the data: a bucket holding no rows still commits (zero counts),
-    # so its graph_state hash has a metrics row and a resume skips it
+    # --- metrics: per-bucket lineage + fixed-width link-score histogram,
+    # collected as one small aggregate and built into rows on the driver
+    counts = lineage_counts(triples, errors, turn_counts)
     run_buckets = [b for b in range(n_buckets) if b not in set(skipped)]
-    metrics = (
-        spark.createDataFrame([(b,) for b in run_buckets], "bucket int")
-        .join(turn_counts, "bucket", "left")
-        .join(hist, "bucket", "left")
-        .join(err_counts, "bucket", "left")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.element_at(bucket_hash, F.col("bucket") + 1).alias(
-                "partition_hash"
-            ),
-            F.lit(snap).alias("snapshot_id"),
-            F.col("bucket"),
-            F.coalesce("n_turns", F.lit(0)).alias("n_turns"),
-            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-            F.coalesce("n_errors", F.lit(0)).alias("n_errors"),
-            F.coalesce(
-                "link_score_hist",
-                F.array().cast(METRICS["link_score_hist"].dataType),
-            ).alias("link_score_hist"),
-        )
-    )
 
     # --- materialize: data first, metrics (the commit marker) last, so a
     # crash mid-write is re-done on resume rather than falsely committed.
-    # The triples write IS the cache materialization: the cache sits below
-    # the write's repartition, so one pass computes the join, populates the
-    # cache for the downstream aggregates, and lands the data.  (A former
-    # standalone triples.count() materialization pass re-scanned the whole
-    # cached set — minutes of pure re-read at 30 M triples on 8 cores —
-    # purely to get a number parquet footers already carry.)
+    # In the fallback branch the triples write IS the cache
+    # materialization: the cache sits below the write's repartition, so
+    # one pass computes the join, populates the cache for the downstream
+    # aggregates, and lands the data.
     def _write_triples() -> None:
         # bucket co-location for the partitioned write (without it every
         # task writes a file per bucket — tasks x buckets small files, a
@@ -851,20 +898,21 @@ def build_kg(
     )
 
     # --- concurrent materialization with explicit data dependencies:
-    #   triples write  — materializes the triples cache (the cache sits
-    #                    below the write's repartition, one pass computes
-    #                    join + cache + data);
-    #   vertices write — depends ONLY on the cached mapping, so it runs
+    #   triples write  — reads the extraction cache through the broadcast
+    #                    probes (fallback branch: materializes the triples
+    #                    cache, one pass computing join + cache + data);
+    #   vertices write — depends ONLY on the mapping, so it runs
     #                    CONCURRENTLY with the triples write;
-    #   edges write    — aggregates the triples cache, so it starts only
-    #                    after the triples write populated it (starting
-    #                    earlier would race the cache and compute the join
-    #                    twice);
-    #   metrics agg    — also reads only the triples cache, so it
-    #                    MATERIALIZES concurrently with the aggregate
-    #                    writes (cache + count);
-    #   metrics append — the commit marker, strictly last: the tiny
-    #                    parquet append of the pre-materialized rows.
+    #   lineage counts — one collect of lineage_counts.  Broadcast branch:
+    #                    nothing below it is filled by a write, so it is
+    #                    submitted with the triples write; fallback branch:
+    #                    it reads the triples cache, so it waits for the
+    #                    write that fills it (racing the cache would
+    #                    compute the join twice);
+    #   edges write    — aggregates the triples, started after the triples
+    #                    write (fallback: once the cache is populated);
+    #   metrics append — the commit marker, strictly last: a local
+    #                    relation of the rows built from the lineage counts.
     # Row counts ride the writes themselves as Observations: zero extra
     # jobs, zero storage reads — the write that lands the table reports its
     # own row count (the round-2 footer glob was a driver listing storm on
@@ -892,6 +940,7 @@ def build_kg(
 
     t0 = time.monotonic()
     with cf.ThreadPoolExecutor(max_workers=3) as pool:
+        fc = pool.submit(counts.collect) if clustered_write else None
         ft = pool.submit(_write_triples)
         fv = (
             None
@@ -900,11 +949,8 @@ def build_kg(
         )
         ft.result()
         phases["write_triples"] = round(time.monotonic() - t0, 2)
-        # the metrics rows depend only on the now-populated triples cache:
-        # materialize them concurrently with the aggregate writes; only the
-        # commit-marker APPEND below stays strictly last
-        metrics = metrics.cache()
-        fm = pool.submit(metrics.count)
+        if fc is None:
+            fc = pool.submit(counts.collect)
         t1 = time.monotonic()
         if replayed:
             # the aggregates already include every bucket this run
@@ -931,23 +977,22 @@ def build_kg(
             else:
                 # a fresh (non-merge) write resets the graph to this run
                 _write_graph_state(output_dir, run_hashes)
-        fm.result()
+        metrics = lineage_rows(
+            fc.result(), run_id, snap, n_buckets, run_buckets
+        )
     phases["write_aggregates"] = round(time.monotonic() - t1, 2)
 
-    # metrics (the commit marker) last: an append of the already-cached
-    # rows; the Observation carries the triple count off that same scan —
-    # no separate aggregate job
+    # metrics (the commit marker) last: the driver-built rows appended as
+    # one local-relation file
     t0 = time.monotonic()
-    obs_m = Observation()
-    metrics.observe(
-        obs_m, F.coalesce(F.sum("n_triples"), F.lit(0)).alias("n")
-    ).write.mode("append").parquet(metrics_path)
-    n_triples = int(obs_m.get["n"])
+    spark.createDataFrame(metrics, METRICS).coalesce(1).write.mode(
+        "append"
+    ).parquet(metrics_path)
+    n_triples = int(metrics["n_triples"].sum())
     phases["write_metrics"] = round(time.monotonic() - t0, 2)
     extracted.unpersist()
     mapping.unpersist()
     triples.unpersist()
-    metrics.unpersist()
     summary = {
         "run_id": run_id,
         "snapshot_id": snap,

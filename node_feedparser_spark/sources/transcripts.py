@@ -20,9 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from ..schemas import TRANSCRIPTS
 
 
-def snapshot_id(path: str) -> str:
-    """Deterministic content-identity for a parquet file/directory."""
+def snapshot(path: str) -> tuple[str, int]:
+    """(snapshot_id, input_bytes) of a parquet file/directory from one walk
+    of its listing: a deterministic content identity (names + sizes +
+    mtimes) and the total size of its data files, which sizes the build's
+    corpus exchange (plans/pipeline.exchange_partitions)."""
     entries = []
+    n_bytes = 0
     if os.path.isdir(path):
         for root, _, files in os.walk(path):
             for f in sorted(files):
@@ -30,12 +34,14 @@ def snapshot_id(path: str) -> str:
                     continue
                 p = os.path.join(root, f)
                 st = os.stat(p)
+                n_bytes += st.st_size
                 entries.append(f"{os.path.relpath(p, path)}:{st.st_size}:{int(st.st_mtime)}")
     else:
         st = os.stat(path)
+        n_bytes = st.st_size
         entries.append(f"{os.path.basename(path)}:{st.st_size}:{int(st.st_mtime)}")
     digest = hashlib.sha1("\n".join(sorted(entries)).encode()).hexdigest()
-    return f"snap-{digest[:16]}"
+    return f"snap-{digest[:16]}", n_bytes
 
 
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:

@@ -14,6 +14,7 @@ from node_feedparser_spark.operators.canonicalize import (
     VERTICES_SCHEMA,
     _canonicalize_dist,
     canonicalize,
+    canonicalize_sized,
     lsh_candidate_pairs,
 )
 from node_feedparser_spark.operators.components import connected_components
@@ -222,19 +223,27 @@ def test_canonicalize_paths_agree(spark, make):
 def test_canonicalize_empty_surfaces(spark):
     surfaces = spark.createDataFrame([], "surface string, n_mentions long")
     decisions = {}
-    mapping, vertices = canonicalize(spark, surfaces, decisions)
+    mapping, vertices, n_bytes = canonicalize_sized(spark, surfaces, decisions)
     assert decisions == {"canonicalize": "driver", "surfaces": 0}
+    assert n_bytes == 0
     assert mapping.schema == MAPPING_SCHEMA and mapping.count() == 0
     assert vertices.schema == VERTICES_SCHEMA and vertices.count() == 0
 
 
 def test_canonicalize_above_cutoff_routes_distributed(spark, corpus_pdf, monkeypatch):
-    """Past LOCAL_SURFACES the distributed path runs, with the same result."""
+    """Past LOCAL_SURFACES the distributed path runs, with the same result
+    and, through canonicalize_sized, the same mapping size estimate."""
     monkeypatch.setattr(canon, "LOCAL_SURFACES", 10)
     ref = extract_corpus(corpus_pdf.to_dict("records"))
     surfaces = _surfaces(spark, ref.triples)
     decisions = {}
     got = _rows(*canonicalize(spark, surfaces, decisions))
     assert decisions == {"canonicalize": "distributed", "surfaces": 11}
+    dist_mapping, dist_vertices, dist_bytes = canonicalize_sized(spark, surfaces)
+    assert _rows(dist_mapping, dist_vertices) == got
+    dist_mapping.unpersist()
     monkeypatch.undo()
     assert got == _rows(*canonicalize(spark, surfaces))
+    mapping, vertices, n_bytes = canonicalize_sized(spark, surfaces)
+    assert _rows(mapping, vertices) == got
+    assert dist_bytes == n_bytes == sum(map(len, got[0])) + 48 * len(got[0])

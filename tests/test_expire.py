@@ -20,7 +20,7 @@ from node_feedparser_spark.plans.expire import (
 )
 from node_feedparser_spark.plans.pipeline import build_kg
 from node_feedparser_spark.plans.validate import validate_kg
-from node_feedparser_spark.sources.transcripts import snapshot_id
+from node_feedparser_spark.sources.transcripts import snapshot
 
 
 @pytest.fixture()
@@ -37,7 +37,7 @@ def split_kg(spark, corpus_pdf, tmp_path):
         half.to_parquet(p, index=False)
         build_kg(spark, p, out, n_buckets=4)
         paths.append(p)
-        snaps.append(snapshot_id(p))
+        snaps.append(snapshot(p)[0])
     return out, snaps[0], snaps[1], paths[0], paths[1]
 
 
@@ -264,7 +264,7 @@ def test_build_kg_recovers_crashed_expiry(spark, split_kg):
 def test_expire_last_snapshot_then_fresh_build(spark, corpus_path, tmp_path):
     out = str(tmp_path / "kg")
     build_kg(spark, corpus_path, out, n_buckets=4)
-    snap = snapshot_id(corpus_path)
+    snap = snapshot(corpus_path)[0]
     summary = expire_snapshot(spark, out, snap)
     assert not summary["noop"]
     assert summary["n_triples_remaining"] == 0

@@ -20,7 +20,7 @@ from node_feedparser_spark.plans.expire import (
 )
 from node_feedparser_spark.plans.pipeline import build_kg
 from node_feedparser_spark.plans.validate import validate_kg
-from node_feedparser_spark.sources.transcripts import snapshot_id
+from node_feedparser_spark.sources.transcripts import snapshot
 
 N_BUCKETS = 4
 
@@ -39,7 +39,7 @@ def three_snap_kg(spark, corpus_pdf, tmp_path):
         part.to_parquet(p, index=False)
         build_kg(spark, p, out, n_buckets=N_BUCKETS)
         paths.append(p)
-        snaps.append(snapshot_id(p))
+        snaps.append(snapshot(p)[0])
     return out, snaps, paths
 
 

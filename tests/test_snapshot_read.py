@@ -10,11 +10,8 @@ import os
 from pyspark.sql import functions as F
 
 from node_feedparser_spark.datagen import write_transcripts
-from node_feedparser_spark.plans.pipeline import (
-    build_kg,
-    read_triples_snapshot,
-    snapshot_id,
-)
+from node_feedparser_spark.plans.pipeline import build_kg, read_triples_snapshot
+from node_feedparser_spark.sources.transcripts import snapshot
 
 
 def _two_snapshots(spark, tmp_path):
@@ -69,4 +66,5 @@ def test_snapshot_filters_are_partition_filters(spark, tmp_path):
 def test_snapshot_id_is_input_derived(tmp_path):
     p = str(tmp_path / "c.parquet")
     write_transcripts(p, seed=7, scale=0.1)
-    assert snapshot_id(p) == snapshot_id(p)  # stable
+    assert snapshot(p) == snapshot(p)  # stable
+    assert snapshot(p)[1] == os.path.getsize(p)  # input_bytes

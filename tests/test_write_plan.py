@@ -89,6 +89,7 @@ def test_frame_schema_is_the_table_contract(spark):
 
 from node_feedparser_spark.operators.extract import dedupe_first_wins
 from node_feedparser_spark.plans.pipeline import (
+    exchange_partitions,
     fuse_write_partitioning,
     triples_clustered_frame,
     write_sub,
@@ -115,14 +116,17 @@ def test_fused_dedupe_has_single_exchange(spark):
     """The prefixed window must ELIDE its exchange: the whole
     dedupe-after-fuse plan carries exactly the one (bucket, wsalt)
     repartition — a second hashpartitioning(conv_id, turn_idx) exchange
-    would mean the fusion silently regressed to two corpus shuffles."""
-    fused = dedupe_first_wins(
-        fuse_write_partitioning(_turns(spark), 4, 2),
-        partition_prefix=("bucket", "wsalt"),
-    )
-    p = fused._jdf.queryExecution().executedPlan().toString()
-    assert p.count("Exchange") == 1, p
-    assert "hashpartitioning(bucket" in p, p
+    would mean the fusion silently regressed to two corpus shuffles.
+    Holds at every exchange size, fewer partitions than buckets too."""
+    for n_partitions in (8, 3):
+        fused = dedupe_first_wins(
+            fuse_write_partitioning(_turns(spark), 4, 2, n_partitions),
+            partition_prefix=("bucket", "wsalt"),
+        )
+        p = fused._jdf.queryExecution().executedPlan().toString()
+        assert p.count("Exchange") == 1, p
+        assert "hashpartitioning(bucket#" in p, p
+        assert f", {n_partitions})" in p, p
 
 
 def test_prefixed_dedupe_equals_unprefixed(spark):
@@ -134,7 +138,7 @@ def test_prefixed_dedupe_equals_unprefixed(spark):
         "conv_id", "turn_idx", "text"
     )
     fused = dedupe_first_wins(
-        fuse_write_partitioning(turns, 4, 2),
+        fuse_write_partitioning(turns, 4, 2, 8),
         partition_prefix=("bucket", "wsalt"),
     ).select("conv_id", "turn_idx", "text")
     assert plain.exceptAll(fused).count() == 0
@@ -158,16 +162,43 @@ def test_fused_clustering_bounds_files_per_bucket(spark):
     in at most `sub` partitions (that bound — not task count — is what caps
     files per bucket when the write skips its repartition), and a
     conversation's rows spread across salts (mega-thread write skew is
-    strictly better than the old one-task-per-conversation salt)."""
+    strictly better than the old one-task-per-conversation salt).  The
+    bound holds whatever the exchange size, fewer partitions than buckets
+    included."""
     n_buckets, sub = 4, 2
     assert write_sub(n_buckets, 2) == sub
-    fused = fuse_write_partitioning(_turns(spark), n_buckets, sub)
-    spread = (
-        fused.withColumn("pid", F.spark_partition_id())
-        .groupBy("bucket")
-        .agg(F.count_distinct("pid").alias("n_tasks"))
-        .collect()
-    )
-    assert len(spread) == n_buckets
-    for row in spread:
-        assert row["n_tasks"] <= sub, spread
+    for n_partitions in (n_buckets * sub, n_buckets - 1):
+        fused = fuse_write_partitioning(
+            _turns(spark), n_buckets, sub, n_partitions
+        )
+        assert fused.rdd.getNumPartitions() == n_partitions
+        spread = (
+            fused.withColumn("pid", F.spark_partition_id())
+            .groupBy("bucket")
+            .agg(F.count_distinct("pid").alias("n_tasks"))
+            .collect()
+        )
+        assert len(spread) == n_buckets
+        for row in spread:
+            assert row["n_tasks"] <= sub, spread
+
+
+def test_exchange_partitions_scale_with_input():
+    """The fused exchange is sized to the input: an input of at most `par`
+    scan splits gets `par` partitions (one per core), any larger one the
+    full n_buckets * sub fan-out — never an in-between count, and never
+    fewer partitions than cores."""
+    mb = 128 << 20
+    n_buckets, par = 8, 4
+    sub = write_sub(n_buckets, par)
+    assert exchange_partitions(n_buckets, sub, par, 150_000, mb) == par
+    assert exchange_partitions(n_buckets, sub, par, 0, mb) == par
+    assert exchange_partitions(n_buckets, sub, par, par * mb, mb) == par
+    assert exchange_partitions(n_buckets, sub, par, par * mb + 1, mb) == 16
+    assert exchange_partitions(n_buckets, sub, par, 6 * mb + 1, mb) == 16
+    assert exchange_partitions(n_buckets, sub, par, 10 << 30, mb) == n_buckets * sub
+    for input_bytes in (0, 1, mb, 5 * mb, 1 << 40):
+        for n_buckets, par in ((1, 1), (4, 16), (32, 4), (256, 64)):
+            sub = write_sub(n_buckets, par)
+            n = exchange_partitions(n_buckets, sub, par, input_bytes, mb)
+            assert n in (par, n_buckets * sub) and n >= par
