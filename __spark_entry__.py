@@ -33,8 +33,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
     documents.parquet is mapped into the transcripts shape
     (conv_id, turn_idx, role, text, tool, ts) — the north-rule input —
-    and pushed through dedupe -> mapInPandas extraction -> broadcast-alias +
-    LSH + connected-components canonicalization.  Returns the triples
+    and pushed through dedupe -> mapInPandas extraction -> canonicalization
+    (alias dictionary + fuzzy Jaccard + union-find).  Returns the triples
     DataFrame (conv_id, turn_idx, subj, pred, obj, score, subj_id, obj_id).
     """
     from node_feedparser_spark.operators.canonicalize import canonicalize

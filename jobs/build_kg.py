@@ -7,8 +7,8 @@ Usage:
         [--buckets 32] [--master local[8]] [--no-resume]
 
 Prints a single JSON summary line (run id, snapshot, counts, phase timings,
-wall seconds, and the decisions the build made: the canonicalize path and
-surface count, mapping_bytes and clustered_write, input_bytes and the
+wall seconds, and the decisions the build made: the distinct surface
+count, mapping_bytes and clustered_write, input_bytes and the
 exchange_partitions sized from them).
 """
 

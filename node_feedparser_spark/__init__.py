@@ -26,7 +26,7 @@ Layout:
                           by tests; analog of feedparser being its own spec)
     datagen.py            deterministic synthetic transcript corpus
     operators/            Spark operators: extract, canonicalize (driver
-                          Jaccard join or LSH), connected components,
+                          Jaccard join + union-find), connected components,
                           dedupe, similarity
     plans/pipeline.py     end-to-end build_kg with lineage + resume
     plans/validate.py     post-build integrity audit

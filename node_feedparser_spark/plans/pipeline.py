@@ -1,10 +1,9 @@
 """build_kg — the flagship end-to-end plan.
 
 transcripts -> dedupe(first-wins) -> extract(mapInPandas) -> canonicalize
-(alias dictionary + exact prefix-filtered Jaccard + union-find on the driver
-below a distinct-surface cutoff; broadcast alias join + MinHash-LSH +
-connected components above it) -> triples / vertices / edges / metrics,
-with per-bucket lineage and resume.
+(alias dictionary + exact prefix-filtered Jaccard + union-find over the
+collected distinct surfaces, on the driver) -> triples / vertices / edges /
+metrics, with per-bucket lineage and resume.
 
 The four outputs are the analogs of the reference's item records, meta
 record, and errors side channel (SURVEY.md §1.3); 'meta before items'
@@ -620,12 +619,11 @@ def build_kg(
     strict_ingest: bool = False,
 ) -> dict:
     """Run the full pipeline.  Returns a summary dict (counts, snapshot,
-    phase timings, and ``decisions``: the canonicalize path taken —
-    "driver" or "distributed" — with the number of distinct surfaces it
-    was chosen on (LOCAL_SURFACES + 1 past the cutoff), the mapping's
-    estimated size in bytes and whether the triples write kept the
-    clustered layout on that basis, the input's file bytes and the
-    partition count of the corpus exchange sized from them).
+    phase timings, and ``decisions``: the number of distinct surfaces
+    canonicalized, the mapping's estimated size in bytes and whether the
+    triples write kept the clustered layout on that basis, the input's
+    file bytes and the partition count of the corpus exchange sized from
+    them).
 
     fail_fast / normalize are the reference's resume_saxerror:false and
     normalize:false option toggles, threaded to extract_triples;
@@ -783,11 +781,12 @@ def build_kg(
     # broadcast (no shuffle/sort of the full triple set, measured 2x on the
     # join+write path).  The gate is an ESTIMATED BYTE size, not a row
     # count: canonicalize_sized returns it (string bytes + ~48 B/row of
-    # object+hash overhead), from the frame the driver path collected or
-    # from one aggregate over the distributed path's cached mapping.
-    # Broadcasting is forced only under 64 MB estimated — far below
-    # executor budgets even with the 2x hint (subj + obj).  Past the gate we do NOT hint and let AQE convert the join at
-    # runtime if the post-shuffle size qualifies; the worst case is a
+    # object+hash overhead) from the surfaces it collected.  Broadcasting
+    # is forced only under 64 MB estimated — far below executor budgets
+    # even with the 2x hint (subj + obj); 1 M surfaces of 6-13 characters
+    # estimate 57 MB, so a larger or longer-surfaced set passes it.  Past
+    # the gate we do NOT hint and let AQE convert the join
+    # at runtime if the post-shuffle size qualifies; the worst case is a
     # sort-merge join that shuffles the triple set twice (subj then obj) —
     # correct, just ~2x slower on the join+write path at fixture scale.
     # Forced-broadcast joins are partition-preserving, so the (bucket,
@@ -991,7 +990,6 @@ def build_kg(
     n_triples = int(metrics["n_triples"].sum())
     phases["write_metrics"] = round(time.monotonic() - t0, 2)
     extracted.unpersist()
-    mapping.unpersist()
     triples.unpersist()
     summary = {
         "run_id": run_id,

@@ -1,5 +1,6 @@
-"""Canonicalization — the driver path (prefix-filtered Jaccard + union-find)
-and the distributed path (LSH + CC) — vs the exact pure-Python oracle."""
+"""Canonicalization (prefix-filtered Jaccard + union-find on the driver) vs
+the exact pure-Python oracle, plus the JVM column helpers and connected
+components the benchmark's layer probes time."""
 
 import random
 import string
@@ -8,11 +9,9 @@ from collections import Counter
 import pytest
 
 from node_feedparser_spark.functions.normalize import char_shingles, jaccard
-from node_feedparser_spark.operators import canonicalize as canon
 from node_feedparser_spark.operators.canonicalize import (
     MAPPING_SCHEMA,
     VERTICES_SCHEMA,
-    _canonicalize_dist,
     canonicalize,
     canonicalize_sized,
     lsh_candidate_pairs,
@@ -126,17 +125,13 @@ def _rows(mapping, vertices):
     )
 
 
-def _assert_paths_match_oracle(spark, triples, want_path="driver"):
-    """canonicalize() (taking `want_path`) and the distributed path give the
-    same mapping and vertices — rows and schemas — and both equal the
-    exact O(n^2) oracle grouping."""
-    surfaces = _surfaces(spark, triples)
-    decisions = {}
-    got = canonicalize(spark, surfaces, decisions)
-    assert decisions["canonicalize"] == want_path
-    dist = _canonicalize_dist(spark, surfaces)
-    assert got[0].schema == dist[0].schema == MAPPING_SCHEMA
-    assert got[1].schema == dist[1].schema == VERTICES_SCHEMA
+def _assert_matches_oracle(spark, triples):
+    """canonicalize_sized() gives the exact O(n^2) oracle grouping, in the
+    mapping and vertices schemas, with the mapping's size estimate: the
+    surface string bytes + 48 B/row."""
+    mapping, vertices, n_bytes = canonicalize_sized(spark, _surfaces(spark, triples))
+    assert mapping.schema == MAPPING_SCHEMA
+    assert vertices.schema == VERTICES_SCHEMA
 
     oracle_ids, oracle_vertices = canonicalize_entities(triples)
     want = (
@@ -148,7 +143,8 @@ def _assert_paths_match_oracle(spark, triples, want_path="driver"):
             for v in oracle_vertices
         },
     )
-    assert _rows(*got) == _rows(*dist) == want
+    assert _rows(mapping, vertices) == want
+    assert n_bytes == sum(map(len, oracle_ids)) + 48 * len(oracle_ids)
     return want
 
 
@@ -157,11 +153,12 @@ def _mentions(surfaces, conv="conv:c0"):
 
 
 def test_canonicalize_matches_oracle(spark, corpus_pdf):
-    """On the fixture corpus both paths equal the exact oracle grouping
-    (same partition of surface forms, same entity IDs, same canonical
-    names)."""
+    """On the fixture corpus canonicalize() equals the exact oracle
+    grouping (same partition of surface forms, same entity IDs, same
+    canonical names), through both entry points."""
     ref = extract_corpus(corpus_pdf.to_dict("records"))
-    _assert_paths_match_oracle(spark, ref.triples)
+    want = _assert_matches_oracle(spark, ref.triples)
+    assert _rows(*canonicalize(spark, _surfaces(spark, ref.triples))) == want
 
 
 def _planted():
@@ -211,7 +208,9 @@ def _jaccard_boundary():
     ids=["planted", "pseudo_collision", "jaccard_boundary"],
 )
 def test_canonicalize_paths_agree(spark, make):
-    ids, vertices = _assert_paths_match_oracle(spark, make())
+    """Planted variants, pseudo-key collisions and a pair at Jaccard exactly
+    0.55 all match the oracle."""
+    ids, vertices = _assert_matches_oracle(spark, make())
     if make is _jaccard_boundary:
         a, b = map(char_shingles, _boundary_keys())
         assert jaccard(a, b) == 0.55 and len(vertices) == 2  # pair + conv
@@ -224,26 +223,7 @@ def test_canonicalize_empty_surfaces(spark):
     surfaces = spark.createDataFrame([], "surface string, n_mentions long")
     decisions = {}
     mapping, vertices, n_bytes = canonicalize_sized(spark, surfaces, decisions)
-    assert decisions == {"canonicalize": "driver", "surfaces": 0}
+    assert decisions == {"surfaces": 0}
     assert n_bytes == 0
     assert mapping.schema == MAPPING_SCHEMA and mapping.count() == 0
     assert vertices.schema == VERTICES_SCHEMA and vertices.count() == 0
-
-
-def test_canonicalize_above_cutoff_routes_distributed(spark, corpus_pdf, monkeypatch):
-    """Past LOCAL_SURFACES the distributed path runs, with the same result
-    and, through canonicalize_sized, the same mapping size estimate."""
-    monkeypatch.setattr(canon, "LOCAL_SURFACES", 10)
-    ref = extract_corpus(corpus_pdf.to_dict("records"))
-    surfaces = _surfaces(spark, ref.triples)
-    decisions = {}
-    got = _rows(*canonicalize(spark, surfaces, decisions))
-    assert decisions == {"canonicalize": "distributed", "surfaces": 11}
-    dist_mapping, dist_vertices, dist_bytes = canonicalize_sized(spark, surfaces)
-    assert _rows(dist_mapping, dist_vertices) == got
-    dist_mapping.unpersist()
-    monkeypatch.undo()
-    assert got == _rows(*canonicalize(spark, surfaces))
-    mapping, vertices, n_bytes = canonicalize_sized(spark, surfaces)
-    assert _rows(mapping, vertices) == got
-    assert dist_bytes == n_bytes == sum(map(len, got[0])) + 48 * len(got[0])

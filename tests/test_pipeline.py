@@ -77,7 +77,6 @@ def test_build_kg_end_to_end(spark, corpus_path, corpus_pdf, tmp_path):
         "input_bytes": snapshot(corpus_path)[1],
         # a 50 KB input: one partition per core, not n_buckets * sub = 16
         "exchange_partitions": spark.sparkContext.defaultParallelism,
-        "canonicalize": "driver",
         "surfaces": 238,
         "mapping_bytes": sum(map(len, surfaces)) + 48 * len(surfaces),
         "clustered_write": True,
