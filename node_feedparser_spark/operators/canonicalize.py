@@ -230,27 +230,26 @@ def fuzzy_pairs(keys: list[str]):
                 yield keys[j], keys[i]
 
 
-def canonicalize(spark: SparkSession, surfaces: DataFrame):
+def canonicalize(
+    spark: SparkSession, surfaces: DataFrame, decisions: dict | None = None
+):
     """surfaces(surface, n_mentions) -> (mapping, vertices).
 
     mapping:  (surface, entity_id)
     vertices: (entity_id, canonical_name, aliases, n_mentions) — canonical
               name = most-mentioned surface, ties lexicographic
               (matches the pure-Python spec).
-    """
-    return canonicalize_sized(spark, surfaces)[:2]
 
-
-def canonicalize_sized(
-    spark: SparkSession, surfaces: DataFrame, decisions: dict | None = None
-):
-    """canonicalize() plus the mapping's estimated in-memory size
-    (mapping_bytes()), for a caller that gates a broadcast on it:
-    (mapping, vertices, mapping_bytes).  One job collects the surfaces;
-    when given, `decisions` receives their number ("surfaces")."""
+    One job collects the surfaces.  When given, `decisions` receives their
+    number ("surfaces") and the mapping's estimated in-memory size
+    ("mapping_bytes", from mapping_bytes()), which a caller can gate a
+    broadcast of the mapping on."""
     pdf = surfaces.toPandas()
     if decisions is not None:
         decisions["surfaces"] = len(pdf)
+        decisions["mapping_bytes"] = mapping_bytes(
+            len(pdf), int(pdf["surface"].str.len().sum())
+        )
     n_mentions = dict(zip(pdf["surface"], pdf["n_mentions"]))
     key_of = {}
     for s in n_mentions:
@@ -283,11 +282,9 @@ def canonicalize_sized(
         ],
         columns=VERTICES_SCHEMA.names,
     )
-    n_bytes = mapping_bytes(len(pdf), int(pdf["surface"].str.len().sum()))
     return (
         spark.createDataFrame(mapping, MAPPING_SCHEMA),
         spark.createDataFrame(vertices, VERTICES_SCHEMA),
-        n_bytes,
     )
 
 

@@ -76,7 +76,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import canonicalize_sized
+from ..operators.canonicalize import canonicalize
 from ..operators.extract import (
     ERROR_PRED,
     MAX_TEXT_BYTES,
@@ -758,7 +758,7 @@ def build_kg(
         .groupBy("surface")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
     )
-    # canonicalize_sized() materializes extraction eagerly (its first job
+    # canonicalize() materializes extraction eagerly (its first job
     # collects the distinct surfaces, filling the extraction cache), so
     # time it as a phase
     t0 = time.monotonic()
@@ -766,8 +766,7 @@ def build_kg(
         "input_bytes": input_bytes,
         "exchange_partitions": n_partitions,
     }
-    mapping, vertices, n_bytes = canonicalize_sized(spark, surfaces, decisions)
-    decisions["mapping_bytes"] = n_bytes
+    mapping, vertices = canonicalize(spark, surfaces, decisions)
     phases["extract_canonicalize"] = round(time.monotonic() - t0, 2)
 
     m_subj = mapping.withColumnRenamed("surface", "subj").withColumnRenamed(
@@ -780,8 +779,8 @@ def build_kg(
     # surfaces ≪ mentions, so the surface->entity mapping usually fits a
     # broadcast (no shuffle/sort of the full triple set, measured 2x on the
     # join+write path).  The gate is an ESTIMATED BYTE size, not a row
-    # count: canonicalize_sized returns it (string bytes + ~48 B/row of
-    # object+hash overhead) from the surfaces it collected.  Broadcasting
+    # count: canonicalize records it in decisions (string bytes + ~48 B/row
+    # of object+hash overhead) from the surfaces it collected.  Broadcasting
     # is forced only under 64 MB estimated — far below executor budgets
     # even with the 2x hint (subj + obj); 1 M surfaces of 6-13 characters
     # estimate 57 MB, so a larger or longer-surfaced set passes it.  Past
@@ -792,8 +791,14 @@ def build_kg(
     # Forced-broadcast joins are partition-preserving, so the (bucket,
     # wsalt) clustering from fuse_write_partitioning still holds at the
     # write and the triples need no second shuffle; past the gate the join
-    # may shuffle, so the write falls back to the salted repartition
-    clustered_write = n_bytes <= 64 * 1024 * 1024
+    # may shuffle, so the write falls back to the salted repartition.
+    # Measured past the gate (1.5 M surfaces, 90 MB estimated, 5 M triples,
+    # local[4] on 4 vCPUs, 4 alternating pairs): forcing the broadcast
+    # there completes, but the write and both aggregates each rebuild and
+    # probe the two 1.5 M-row hash relations, so it used more CPU in 3 of
+    # 4 pairs (medians 252 vs 240 CPU-s) and ~20 % more wall time than
+    # this fallback, which joins once into the triples cache
+    clustered_write = decisions["mapping_bytes"] <= 64 * 1024 * 1024
     decisions["clustered_write"] = clustered_write
     if clustered_write:
         m_subj, m_obj = F.broadcast(m_subj), F.broadcast(m_obj)

@@ -50,6 +50,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import METRICS
+
 
 def _check(name: str, ok: bool, observed: Any, expected: Any,
            severity: str = "fail") -> dict:
@@ -75,7 +77,12 @@ def validate_kg(spark: SparkSession, output_dir: str) -> dict:
     triples = spark.read.parquet(os.path.join(output_dir, "triples"))
     vertices = spark.read.parquet(os.path.join(output_dir, "vertices"))
     edges = spark.read.parquet(os.path.join(output_dir, "edges"))
-    metrics = spark.read.parquet(os.path.join(output_dir, "metrics"))
+    # declared schema, as committed_partitions reads it: a metrics dir
+    # holding no data file (a crash inside the first commit leaves only
+    # `_temporary/`) audits as no commits instead of failing inference
+    metrics = spark.read.schema(METRICS).parquet(
+        os.path.join(output_dir, "metrics")
+    )
 
     checks: list[dict] = []
 

@@ -26,3 +26,43 @@ def corpus_path(tmp_path_factory):
     p = tmp_path_factory.mktemp("corpus") / "transcripts.parquet"
     write_transcripts(str(p), seed=42, scale=1.0)
     return str(p)
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """count_jobs(fn): run fn(); return its result, the number of Spark
+    jobs started meanwhile from any thread, and the tasks those jobs ran.
+    Job ids are global and sequential, so the jobs are the id gap between
+    two marker jobs of one job group; tasks are summed over their distinct
+    stages (a reused shuffle stage is listed by every job that reads it,
+    and runs its tasks once)."""
+    sc = spark.sparkContext
+    group = "test-job-budget"
+
+    def marker() -> int:
+        sc.parallelize([0], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run(fn):
+        sc.setJobGroup(group, "job budget")
+        try:
+            start = marker()
+            out = fn()
+            end = marker()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tracker = sc.statusTracker()
+        stages = {
+            sid
+            for job in range(start + 1, end)
+            for sid in tracker.getJobInfo(job).stageIds
+        }
+        # past spark.ui.retainedStages the status store evicts the stages
+        # with no completion time first — the skipped ones, which ran no
+        # tasks — so in a long session a skipped stage's info may be gone
+        infos = [tracker.getStageInfo(sid) for sid in stages]
+        n_tasks = sum(i.numCompletedTasks for i in infos if i is not None)
+        return out, end - start - 1, n_tasks
+
+    return run

@@ -13,7 +13,6 @@ from node_feedparser_spark.operators.canonicalize import (
     MAPPING_SCHEMA,
     VERTICES_SCHEMA,
     canonicalize,
-    canonicalize_sized,
     lsh_candidate_pairs,
 )
 from node_feedparser_spark.operators.components import connected_components
@@ -126,10 +125,11 @@ def _rows(mapping, vertices):
 
 
 def _assert_matches_oracle(spark, triples):
-    """canonicalize_sized() gives the exact O(n^2) oracle grouping, in the
-    mapping and vertices schemas, with the mapping's size estimate: the
-    surface string bytes + 48 B/row."""
-    mapping, vertices, n_bytes = canonicalize_sized(spark, _surfaces(spark, triples))
+    """canonicalize() gives the exact O(n^2) oracle grouping, in the
+    mapping and vertices schemas, and records the surface count and the
+    mapping's size estimate: the surface string bytes + 48 B/row."""
+    decisions = {}
+    mapping, vertices = canonicalize(spark, _surfaces(spark, triples), decisions)
     assert mapping.schema == MAPPING_SCHEMA
     assert vertices.schema == VERTICES_SCHEMA
 
@@ -144,7 +144,10 @@ def _assert_matches_oracle(spark, triples):
         },
     )
     assert _rows(mapping, vertices) == want
-    assert n_bytes == sum(map(len, oracle_ids)) + 48 * len(oracle_ids)
+    assert decisions == {
+        "surfaces": len(oracle_ids),
+        "mapping_bytes": sum(map(len, oracle_ids)) + 48 * len(oracle_ids),
+    }
     return want
 
 
@@ -155,7 +158,7 @@ def _mentions(surfaces, conv="conv:c0"):
 def test_canonicalize_matches_oracle(spark, corpus_pdf):
     """On the fixture corpus canonicalize() equals the exact oracle
     grouping (same partition of surface forms, same entity IDs, same
-    canonical names), through both entry points."""
+    canonical names), with and without a decisions dict."""
     ref = extract_corpus(corpus_pdf.to_dict("records"))
     want = _assert_matches_oracle(spark, ref.triples)
     assert _rows(*canonicalize(spark, _surfaces(spark, ref.triples))) == want
@@ -222,8 +225,7 @@ def test_canonicalize_paths_agree(spark, make):
 def test_canonicalize_empty_surfaces(spark):
     surfaces = spark.createDataFrame([], "surface string, n_mentions long")
     decisions = {}
-    mapping, vertices, n_bytes = canonicalize_sized(spark, surfaces, decisions)
-    assert decisions == {"surfaces": 0}
-    assert n_bytes == 0
+    mapping, vertices = canonicalize(spark, surfaces, decisions)
+    assert decisions == {"surfaces": 0, "mapping_bytes": 0}
     assert mapping.schema == MAPPING_SCHEMA and mapping.count() == 0
     assert vertices.schema == VERTICES_SCHEMA and vertices.count() == 0

@@ -30,46 +30,12 @@ BUILD_JOB_BUDGET = 17
 BUILD_TASK_BUDGET = 48
 
 
-def _count_jobs(spark, fn):
-    """Run fn(); return its result, the number of Spark jobs started
-    meanwhile from any thread, and the tasks those jobs ran.  Job ids are
-    global and sequential, so the jobs are the id gap between two marker
-    jobs of one job group; tasks are summed over their distinct stages (a
-    reused shuffle stage is listed by every job that reads it, and runs
-    its tasks once)."""
-    sc = spark.sparkContext
-    group = "test-job-budget"
-
-    def marker() -> int:
-        sc.parallelize([0], 1).count()
-        return max(sc.statusTracker().getJobIdsForGroup(group))
-
-    sc.setJobGroup(group, "job budget")
-    try:
-        start = marker()
-        out = fn()
-        end = marker()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    stages = {
-        sid
-        for job in range(start + 1, end)
-        for sid in tracker.getJobInfo(job).stageIds
-    }
-    # past spark.ui.retainedStages the status store evicts the stages with
-    # no completion time first — the skipped ones, which ran no tasks — so
-    # in a long session a skipped stage's info may be gone (None)
-    infos = [tracker.getStageInfo(sid) for sid in stages]
-    n_tasks = sum(i.numCompletedTasks for i in infos if i is not None)
-    return out, end - start - 1, n_tasks
-
-
-def test_build_kg_end_to_end(spark, corpus_path, corpus_pdf, tmp_path):
+def test_build_kg_end_to_end(
+    spark, corpus_path, corpus_pdf, tmp_path, count_jobs
+):
     out = str(tmp_path / "kg")
-    summary, n_jobs, n_tasks = _count_jobs(
-        spark, lambda: build_kg(spark, corpus_path, out, n_buckets=8)
+    summary, n_jobs, n_tasks = count_jobs(
+        lambda: build_kg(spark, corpus_path, out, n_buckets=8)
     )
     ref = extract_corpus(corpus_pdf.to_dict("records"))
     surfaces = {t[k] for t in ref.triples for k in ("subj", "obj")}

@@ -12,6 +12,12 @@ import pytest
 from node_feedparser_spark.plans.pipeline import build_kg
 from node_feedparser_spark.plans.validate import validate_kg
 
+# Spark jobs and tasks one audit of the 4-bucket fixture build runs,
+# counted as the build's BUILD_JOB_BUDGET is: lower them when a change
+# removes audit jobs or tasks, never raise them to pass
+AUDIT_JOB_BUDGET = 37
+AUDIT_TASK_BUDGET = 72
+
 
 @pytest.fixture(scope="module")
 def kg_dir(spark, corpus_path, tmp_path_factory):
@@ -46,8 +52,10 @@ def kg_copy(kg_dir, tmp_path):
     return dst
 
 
-def test_clean_build_passes_everything(spark, kg_dir):
-    report = validate_kg(spark, kg_dir)
+def test_clean_build_passes_everything(spark, kg_dir, count_jobs):
+    report, n_jobs, n_tasks = count_jobs(lambda: validate_kg(spark, kg_dir))
+    assert n_jobs <= AUDIT_JOB_BUDGET, n_jobs
+    assert n_tasks <= AUDIT_TASK_BUDGET, n_tasks
     assert report["ok"], report
     assert report["n_fail"] == 0 and report["n_warn"] == 0
     assert report["n_triples"] > 0
@@ -91,6 +99,24 @@ def test_empty_buckets_commit_and_resume(spark, corpus_path, tmp_path):
     rerun = build_kg(spark, corpus_path, out, n_buckets=n_buckets)
     assert rerun["skipped_buckets"] == list(range(n_buckets))
     assert rerun["n_triples"] == 0
+
+
+def test_crash_in_first_metrics_commit_is_caught(spark, kg_copy):
+    """A crash inside the first metrics commit leaves data, aggregates and
+    graph_state.json but a metrics dir holding only `_temporary/`: the
+    audit reads that as no commits and fails the two checks that compare
+    against the metrics table, instead of raising on schema inference."""
+    metrics = os.path.join(kg_copy, "metrics")
+    shutil.rmtree(metrics)
+    os.makedirs(os.path.join(metrics, "_temporary", "0"))
+    report = validate_kg(spark, kg_copy)
+    by = _by_name(report)
+    assert not report["ok"]
+    assert by["graph_state_matches_metrics"]["status"] == "fail"
+    assert by["graph_state_matches_metrics"]["observed"]["metrics_only"] == []
+    assert by["metrics_reconcile_per_partition"]["status"] == "fail"
+    bad = by["metrics_reconcile_per_partition"]["observed"]
+    assert bad and all(r["metrics"] == 0 for r in bad)
 
 
 def test_dropped_vertices_break_refs_and_mention_mass(spark, kg_copy):

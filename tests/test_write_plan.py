@@ -1,6 +1,7 @@
-"""Plan-shape gates for the triples write frame (plans/pipeline.py
-triples_write_frame): the two properties that decide write-phase cost at
-cluster scale.
+"""Plan-shape gates for the two triples write frames (plans/pipeline.py:
+triples_write_frame, the fallback's salted repartition, and
+triples_clustered_frame over fuse_write_partitioning's exchange): the two
+properties that decide write-phase cost at cluster scale hold for both.
 
 1. The per-row-constant columns (lineage struct, snap literal) are
    computed ABOVE the co-locating exchange — shuffling them would roughly
@@ -14,7 +15,15 @@ cluster scale.
 
 from pyspark.sql import functions as F
 
-from node_feedparser_spark.plans.pipeline import triples_write_frame
+from node_feedparser_spark.operators.extract import dedupe_first_wins
+from node_feedparser_spark.plans.pipeline import (
+    exchange_partitions,
+    fuse_write_partitioning,
+    partition_hash,
+    triples_clustered_frame,
+    triples_write_frame,
+    write_sub,
+)
 
 SNAP = "snap-0123456789abcdef"
 
@@ -41,59 +50,69 @@ def _triples(spark, n_convs=200, n_buckets=4):
     )
 
 
+def _write_frames(spark):
+    """Both frames build_kg can write, over the same triples: the
+    fallback's, and the broadcast branch's over the fused exchange."""
+    return {
+        "fallback": triples_write_frame(_triples(spark), SNAP, 4, 4),
+        "clustered": triples_clustered_frame(
+            fuse_write_partitioning(_triples(spark), 4, 4, 16), SNAP, 4
+        ),
+    }
+
+
 def test_constants_attach_above_the_exchange(spark):
-    frame = triples_write_frame(_triples(spark), SNAP, 4, 4)
-    plan = frame._jdf.queryExecution().optimizedPlan().toString()
-    # tree prints parents first: the Project computing lineage must sit
-    # ABOVE (= print before) the repartition node
-    i_lineage = plan.index("partition_hash")
-    i_exchange = plan.index("RepartitionByExpression")
-    assert i_lineage < i_exchange, plan
-    # and the repartition itself must not carry lineage/snap in its output
-    repart_tail = plan[i_exchange:]
-    assert "partition_hash" not in repart_tail, plan
+    for name, frame in _write_frames(spark).items():
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        # tree prints parents first: the Project computing lineage must
+        # sit ABOVE (= print before) the repartition node
+        i_lineage = plan.index("partition_hash")
+        i_exchange = plan.index("RepartitionByExpression")
+        assert i_lineage < i_exchange, (name, plan)
+        # and the repartition itself must not carry lineage/snap in its
+        # output
+        repart_tail = plan[i_exchange:]
+        assert "partition_hash" not in repart_tail, (name, plan)
 
 
 def test_salt_subsplits_each_bucket(spark):
     # n_buckets=4, par=4 -> sub=4, which DIVIDES n_buckets: the correlated
     # salt (xxhash64(conv_id) % sub) would put every bucket in exactly one
     # task.  With 200 convs (~50 per bucket) a decorrelated salt leaves a
-    # single-task bucket with probability ~4 * 0.25^50 — impossible.
-    frame = triples_write_frame(_triples(spark), SNAP, 4, 4)
-    spread = (
-        frame.withColumn("pid", F.spark_partition_id())
-        .groupBy("bucket")
-        .agg(F.count_distinct("pid").alias("n_tasks"))
-        .collect()
-    )
-    assert len(spread) == 4
-    for row in spread:
-        assert row["n_tasks"] > 1, spread
+    # single-task bucket with probability ~4 * 0.25^50 — impossible.  The
+    # fused exchange must also keep each bucket within `sub` partitions.
+    assert write_sub(4, 4) == 4
+    for name, frame in _write_frames(spark).items():
+        spread = (
+            frame.withColumn("pid", F.spark_partition_id())
+            .groupBy("bucket")
+            .agg(F.count_distinct("pid").alias("n_tasks"))
+            .collect()
+        )
+        assert len(spread) == 4, name
+        for row in spread:
+            assert 1 < row["n_tasks"] <= 4, (name, spread)
 
 
 def test_frame_schema_is_the_table_contract(spark):
-    frame = triples_write_frame(_triples(spark), SNAP, 4, 4)
-    assert frame.columns == [
-        "conv_id", "turn_idx", "subj", "pred", "obj", "score",
-        "subj_id", "obj_id", "lineage", "bucket", "snap",
-    ]
-    row = frame.limit(1).collect()[0]
-    assert row["snap"] == SNAP
-    assert row["lineage"]["snapshot_id"] == SNAP
-    assert len(row["lineage"]["partition_hash"]) == 40
+    for name, frame in _write_frames(spark).items():
+        assert frame.columns == [
+            "conv_id", "turn_idx", "subj", "pred", "obj", "score",
+            "subj_id", "obj_id", "lineage", "bucket", "snap",
+        ], name
+        for row in (
+            frame.select("bucket", "lineage", "snap").distinct().collect()
+        ):
+            assert row["snap"] == SNAP
+            assert row["lineage"]["snapshot_id"] == SNAP
+            assert row["lineage"]["partition_hash"] == partition_hash(
+                SNAP, 4, row["bucket"]
+            )
 
 
 # --- round-3 exchange fusion (fuse_write_partitioning +
 # triples_clustered_frame + the prefixed dedupe window): one corpus shuffle
 # serves both the first-wins dedupe and the bucketed write.
-
-from node_feedparser_spark.operators.extract import dedupe_first_wins
-from node_feedparser_spark.plans.pipeline import (
-    exchange_partitions,
-    fuse_write_partitioning,
-    triples_clustered_frame,
-    write_sub,
-)
 
 
 def _turns(spark, n_convs=60, n_buckets=4):
@@ -160,11 +179,10 @@ def test_clustered_frame_adds_no_exchange(spark):
 def test_fused_clustering_bounds_files_per_bucket(spark):
     """Physically: after fuse_write_partitioning, every bucket's rows live
     in at most `sub` partitions (that bound — not task count — is what caps
-    files per bucket when the write skips its repartition), and a
-    conversation's rows spread across salts (mega-thread write skew is
-    strictly better than the old one-task-per-conversation salt).  The
-    bound holds whatever the exchange size, fewer partitions than buckets
-    included."""
+    files per bucket when the write skips its repartition).  The bound
+    holds whatever the exchange size, fewer partitions than buckets
+    included.  The lower bound — every bucket spreads over more than one
+    partition — is test_salt_subsplits_each_bucket's."""
     n_buckets, sub = 4, 2
     assert write_sub(n_buckets, 2) == sub
     for n_partitions in (n_buckets * sub, n_buckets - 1):
