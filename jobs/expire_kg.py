@@ -1,7 +1,7 @@
 """spark-submit entry point for snapshot expiry (the Iceberg
 expire_snapshots maintenance action, local-FS analog — see
-plans/expire.py for the recompute semantics and the three-table
-two-phase commit).
+plans/expire.py for the recompute semantics and the graph commit it
+lands through).
 
 Usage:
     spark-submit jobs/expire_kg.py --output /path/kg --snapshot snap-...

@@ -32,129 +32,47 @@ expired snapshot can still linger on its surviving owner (the carried
 set) — retained-superset semantics for surfaces, single-owner semantics
 for ownership.
 
-Crash safety mirrors the graph commit two-phase protocol
-(pipeline._commit_graph), extended to three tables plus a data delete:
-every staged table is FULLY written before the commit point (the staged
-expire-state rename), and every post-commit step — install renames, the
-expired partition delete, the state promotion — is idempotent, so
-``recover_expire`` replays any crash point to either a clean no-op (pre
-commit point: stages dropped, live tables untouched) or a finished
-expiry.  Namespace discipline: expiry stages are ``<table>.stage-expire-*``;
-the graph-commit protocol only ever touches ``<table>.stage-run-*``, and
-``build_kg`` runs ``recover_expire`` FIRST so its blanket ``.retired``
-cleanup never sees a half-installed expiry.
+Crash safety is the graph commit (pipeline._commit_graph): the three
+tables are staged as ``<table>.stage-run-<id>``, each FULLY written, and
+one commit lands them together with graph_state and the deletion of the
+expired snapshots' triples partitions.  A crash before its commit point
+leaves the live tables untouched; one after it is finished by
+``pipeline._recover_graph_commit``, which every expiry, rollback and
+build runs first.
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import _graph_state_path, _install_staged
-
-_STATE_SUFFIX = ".expire-stage"
-_STAGE_MARK = ".stage-expire-"
-
-
-def _expire_state_path(output_dir: str) -> str:
-    return _graph_state_path(output_dir) + _STATE_SUFFIX
-
-
-def _tables(output_dir: str) -> dict[str, str]:
-    return {
-        t: os.path.join(output_dir, t) for t in ("vertices", "edges", "metrics")
-    }
-
-
-def recover_expire(output_dir: str) -> None:
-    """Finish or discard a half-done expiry.  Called by expire_snapshot
-    and by build_kg (before its own graph-commit recovery)."""
-    state = _expire_state_path(output_dir)
-    tables = _tables(output_dir)
-    in_flight = None
-    if os.path.isfile(state):
-        try:
-            with open(state) as f:
-                in_flight = json.load(f)
-            in_flight["partition_hashes"], in_flight["expired_snapshot"]
-        except (ValueError, KeyError, TypeError):
-            # torn or non-conforming write (TypeError: JSON root not an
-            # object): the commit never started — remove and proceed
-            os.remove(state)
-            in_flight = None
-    if in_flight is not None:
-        for live in tables.values():
-            for s in sorted(glob.glob(glob.escape(live) + _STAGE_MARK + "*")):
-                _install_staged(s, live)
-        _delete_snapshot_partitions(output_dir, in_flight["expired_snapshot"])
-        tmp = _graph_state_path(output_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"partition_hashes": in_flight["partition_hashes"]}, f
-            )
-        os.replace(tmp, _graph_state_path(output_dir))
-        os.remove(state)
-    for live in tables.values():
-        for s in glob.glob(glob.escape(live) + _STAGE_MARK + "*"):
-            shutil.rmtree(s, ignore_errors=True)
-        shutil.rmtree(live + ".retired", ignore_errors=True)
-    tmp = state + ".tmp"
-    if os.path.isfile(tmp):
-        os.remove(tmp)
-
-
-def _delete_snapshot_partitions(
-    output_dir: str, snapshots: str | list[str]
-) -> None:
-    # str accepted for state files written before multi-snapshot expiry
-    # existed (rollback): recovery must replay either format
-    if isinstance(snapshots, str):
-        snapshots = [snapshots]
-    for snapshot in snapshots:
-        shutil.rmtree(
-            os.path.join(output_dir, "triples", f"snap={snapshot}"),
-            ignore_errors=True,
-        )
-
-
-def _write_expire_state(
-    output_dir: str, remaining_hashes: list[str], snapshot: str | list[str]
-) -> str:
-    """Atomically land the staged expire-state — the COMMIT POINT of the
-    three-table protocol.  Everything after this rename is an idempotent
-    rename/delete that recover_expire can replay."""
-    state = _expire_state_path(output_dir)
-    tmp = state + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "partition_hashes": remaining_hashes,
-                "expired_snapshot": snapshot,
-            },
-            f,
-        )
-    os.replace(tmp, state)
-    return state
+from ..schemas import METRICS
+from .compact import recover_compaction
+from .pipeline import (
+    GRAPH_TABLES,
+    _commit_graph,
+    _recover_graph_commit,
+    committed_partitions,
+    resolve_alias_ownership,
+)
 
 
 def _stage_expiry(
     spark: SparkSession,
     output_dir: str,
-    snapshot: str | list[str],
+    snapshots: list[str],
     remaining_hashes: list[str],
     run: str,
-) -> tuple[dict[str, str], int]:
-    """Build and FULLY write the three staged tables for expiring
-    `snapshot` (one id or a list — a multi-snapshot rollback recomputes
-    the aggregates ONCE, not once per dropped snapshot); returns
-    ({table: stage_path}, n_triples_remaining).
-    Shared by expire_snapshot and the crash-recovery tests so the staged
+) -> int:
+    """Build and FULLY write the three staged tables
+    (``<table>.stage-run-<run>``) for expiring `snapshots` — a
+    multi-snapshot rollback recomputes the aggregates ONCE, not once per
+    dropped snapshot; returns the number of triples remaining.
+    Shared by expire_snapshots and the crash-recovery tests so the staged
     shapes cannot drift from the product recompute.
 
     The surviving-triples scan is restricted to COMMITTED partitions
@@ -163,9 +81,8 @@ def _stage_expiry(
     and counting those into the aggregates would double them when that
     build later resumes (metrics is the commit marker everywhere else;
     expiry honors it too)."""
-    snapshots = [snapshot] if isinstance(snapshot, str) else list(snapshot)
     triples_path = os.path.join(output_dir, "triples")
-    tables = _tables(output_dir)
+    tables = {t: os.path.join(output_dir, t) for t in GRAPH_TABLES}
     remaining = (
         spark.read.parquet(triples_path)
         .filter(~F.col("snap").isin(snapshots))
@@ -202,8 +119,6 @@ def _stage_expiry(
         .groupBy("entity_id")
         .agg(F.collect_set("alias").alias("tri_aliases"))
     )
-    from .pipeline import resolve_alias_ownership
-
     vertices_new = resolve_alias_ownership(
         spark.read.parquet(tables["vertices"])
         .drop("n_mentions")
@@ -226,13 +141,12 @@ def _stage_expiry(
             "n_mentions",
         )
     )
-    metrics_new = spark.read.parquet(tables["metrics"]).filter(
-        ~F.col("snapshot_id").isin(snapshots)
+    metrics_new = (
+        spark.read.schema(METRICS)
+        .parquet(tables["metrics"])
+        .filter(~F.col("snapshot_id").isin(snapshots))
     )
-    staged = {
-        name: f"{tables[name]}{_STAGE_MARK}{run}"
-        for name in ("vertices", "edges", "metrics")
-    }
+    staged = {name: f"{path}.stage-run-{run}" for name, path in tables.items()}
 
     # the edges write populates the `remaining` cache; the metrics write
     # is independent, so the two run concurrently.  The vertices write
@@ -262,7 +176,7 @@ def _stage_expiry(
         fm.result()
     n_remaining = int(obs.get["n"])
     remaining.unpersist()
-    return staged, n_remaining
+    return n_remaining
 
 
 def expire_snapshot(
@@ -284,74 +198,44 @@ def expire_snapshots(
     at any point replays as one finished (or one never-started) expiry,
     never a half-rolled-back graph.  Idempotent: snapshots already absent
     contribute nothing, and an all-absent set is a no-op."""
-    from .compact import recover_compaction
-
-    recover_expire(output_dir)
+    _recover_graph_commit(output_dir)
     recover_compaction(output_dir)
 
     snapshots = sorted(set(snapshots))
-    triples_path = os.path.join(output_dir, "triples")
-    tables = _tables(output_dir)
-    if not os.path.isdir(tables["metrics"]):
-        return {
-            "output_dir": output_dir,
-            "expired_snapshots": snapshots,
-            "expired_partitions": 0,
-            "noop": True,
-        }
-    metrics = spark.read.parquet(tables["metrics"])
-    hash_rows = (
-        metrics.select("snapshot_id", "partition_hash").distinct().collect()
-    )
+    metrics_path = os.path.join(output_dir, "metrics")
+    commits = committed_partitions(spark, metrics_path)
     drop = set(snapshots)
-    expired_hashes = sorted(
-        r["partition_hash"] for r in hash_rows if r["snapshot_id"] in drop
-    )
-    remaining_hashes = sorted(
-        r["partition_hash"] for r in hash_rows if r["snapshot_id"] not in drop
-    )
+    expired_hashes = sorted(h for s, h in commits if s in drop)
+    remaining_hashes = sorted(h for s, h in commits if s not in drop)
     any_dir = any(
-        os.path.isdir(os.path.join(triples_path, f"snap={s}"))
+        os.path.isdir(os.path.join(output_dir, "triples", f"snap={s}"))
         for s in snapshots
     )
-    if not expired_hashes and not any_dir:
+    if not os.path.isdir(metrics_path) or not (expired_hashes or any_dir):
         return {
             "output_dir": output_dir,
             "expired_snapshots": snapshots,
             "expired_partitions": 0,
             "noop": True,
         }
-    snapshot = snapshots  # the staged/committed unit is the whole set
 
     # surviving data: partition-pruned, committed-only scan — the
     # aggregates recompute EXACTLY (same agg shapes as build_kg /
     # merge_edges), names/aliases carry over by entity_id (see
-    # _stage_expiry for the recompute and the committed-partition rule)
-    run = uuid.uuid4().hex[:12]
-    staged, n_remaining = _stage_expiry(
-        spark, output_dir, snapshot, remaining_hashes, run
+    # _stage_expiry for the recompute and the committed-partition rule);
+    # then one commit lands the three stages, graph_state and the
+    # expired partitions' deletion
+    n_remaining = _stage_expiry(
+        spark, output_dir, snapshots, remaining_hashes, uuid.uuid4().hex[:12]
     )
-
-    # COMMIT POINT: the staged expire-state rename.  Everything after is
-    # an idempotent rename/delete that recover_expire can replay.
-    state = _write_expire_state(output_dir, remaining_hashes, snapshot)
-    for name in ("vertices", "edges", "metrics"):
-        _install_staged(staged[name], tables[name])
-    _delete_snapshot_partitions(output_dir, snapshot)
-    tmp = _graph_state_path(output_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"partition_hashes": remaining_hashes}, f)
-    os.replace(tmp, _graph_state_path(output_dir))
-    os.remove(state)
-    for live in tables.values():
-        shutil.rmtree(live + ".retired", ignore_errors=True)
+    _commit_graph(output_dir, remaining_hashes, snapshots)
 
     return {
         "output_dir": output_dir,
         "expired_snapshots": snapshots,
         "expired_partitions": len(expired_hashes),
         "remaining_partitions": len(remaining_hashes),
-        "n_triples_remaining": int(n_remaining),
+        "n_triples_remaining": n_remaining,
         "noop": False,
     }
 
@@ -370,17 +254,13 @@ def rollback_keep(
 
     Unknown ids in `keep` raise instead of silently rolling back to less
     than the caller asked to preserve."""
-    recover_expire(output_dir)
-    tables = _tables(output_dir)
-    known: set[str] = set()
-    if os.path.isdir(tables["metrics"]):
-        known = {
-            r["snapshot_id"]
-            for r in spark.read.parquet(tables["metrics"])
-            .select("snapshot_id")
-            .distinct()
-            .collect()
-        }
+    _recover_graph_commit(output_dir)
+    known = {
+        s
+        for s, _ in committed_partitions(
+            spark, os.path.join(output_dir, "metrics")
+        )
+    }
     stranded = {
         os.path.basename(d)[len("snap="):]
         for d in glob.glob(os.path.join(output_dir, "triples", "snap=*"))

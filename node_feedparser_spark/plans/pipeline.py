@@ -48,14 +48,19 @@ Scale design:
   canonical_name follows the merged mention counts) instead of being
   recomputed from this run's partial input.  A driver-side
   graph_state.json records which partition hashes the aggregates already
-  include; both staged tables and the state commit together behind one
-  commit point (_commit_graph: staged state file, then retire-rename +
-  install-rename per table, then state promotion — every post-commit-point
-  step an idempotent rename that _recover_graph_commit finishes after a
-  crash), so any crash point replays as either a clean recompute or a
-  finished commit, never a double-count or a lost table — the file-based
-  analog of the single Iceberg MERGE transaction this becomes on a real
-  warehouse (pinned by tests/test_crash_recovery.py).
+  include.  Every writer of vertices, edges and metrics — a build's merge,
+  a build's fresh write, snapshot expiry and rollback (plans/expire.py) —
+  stages its tables as ``<table>.stage-run-<id>`` and lands them through
+  ONE commit (_commit_graph): the staged state file
+  ``graph_state.json.stage`` is the commit point, and everything after it
+  is _recover_graph_commit — retire-rename + install-rename per table,
+  the dropped snapshots' triples partitions deleted, state promotion,
+  each step idempotent — the same code whether the commit runs straight
+  through or a later run finishes it after a crash.  So any crash point
+  replays as either a clean recompute or a finished commit, never a
+  double-count or a lost table — the file-based analog of the single
+  Iceberg transaction this becomes on a real warehouse (pinned by
+  tests/test_crash_recovery.py).
 - the score histogram per bucket uses a fixed-width bucketing groupBy —
   a map-side-combinable aggregation, not a sketch, so it is deterministic.
 - the metrics table is read with its declared schema, once per build:
@@ -70,6 +75,7 @@ import sys
 import time
 import uuid
 from collections import defaultdict
+from collections.abc import Iterable
 
 import pandas as pd
 
@@ -85,6 +91,7 @@ from ..operators.extract import (
 )
 from ..sources.transcripts import read_transcripts, snapshot
 from ..schemas import METRICS
+from .compact import recover_compaction
 
 DEFAULT_BUCKETS = 32
 
@@ -238,6 +245,11 @@ def resolve_alias_ownership(vertices: DataFrame) -> DataFrame:
     )
 
 
+#: the tables one graph commit installs (_commit_graph); each stages as
+#: ``<table>.stage-run-<id>``
+GRAPH_TABLES = ("vertices", "edges", "metrics")
+
+
 def _graph_state_path(output_dir: str) -> str:
     return os.path.join(output_dir, "graph_state.json")
 
@@ -253,15 +265,6 @@ def _read_graph_state(output_dir: str) -> set[str]:
             return set(json.load(f)["partition_hashes"])
     except (FileNotFoundError, ValueError, KeyError):
         return set()
-
-
-def _write_graph_state(output_dir: str, hashes: set[str]) -> None:
-    import json
-
-    tmp = _graph_state_path(output_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"partition_hashes": sorted(hashes)}, f)
-    os.replace(tmp, _graph_state_path(output_dir))
 
 
 def _install_staged(stage: str, live: str) -> None:
@@ -283,72 +286,70 @@ def _install_staged(stage: str, live: str) -> None:
 
 
 def _commit_graph(
-    output_dir: str,
-    vert_stage: str,
-    vertices_path: str,
-    edge_stage: str,
-    edges_path: str,
-    hashes: set[str],
+    output_dir: str, hashes: Iterable[str], drop_snapshots: Iterable[str] = ()
 ) -> None:
-    """Two-phase commit of the staged vertex/edge merges plus graph_state
-    (the local-FS emulation of one atomic Iceberg MERGE transaction over
-    both tables).  The staged state file is the commit point: before it
-    exists nothing has moved (a crash replays the whole merge against the
-    intact live tables); once it exists, every later step is an idempotent
-    rename, so _recover_graph_commit finishes the commit from any crash
-    point instead of double-merging or losing a table."""
+    """Commit the staged graph tables: every ``<table>.stage-run-*`` of
+    vertices, edges and metrics (each FULLY written before this call),
+    graph_state = `hashes`, and the deletion of `drop_snapshots`' triples
+    partitions land together — the local-FS emulation of one atomic
+    Iceberg transaction.  Writing the staged state file is the commit
+    point: before it exists nothing has moved, and a crash replays against
+    the intact live tables.  Everything after it is _recover_graph_commit
+    itself, every step an idempotent rename or delete, so a crash past the
+    commit point finishes through the same code on the next run."""
     import json
-    import shutil
 
     stage_state = _graph_state_path(output_dir) + ".stage"
     tmp = stage_state + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"partition_hashes": sorted(hashes)}, f)
+        json.dump(
+            {
+                "partition_hashes": sorted(hashes),
+                "drop_snapshots": sorted(drop_snapshots),
+            },
+            f,
+        )
     os.replace(tmp, stage_state)  # COMMIT POINT
-    _install_staged(vert_stage, vertices_path)
-    _install_staged(edge_stage, edges_path)
-    os.replace(stage_state, _graph_state_path(output_dir))
-    for p in (vertices_path + ".retired", edges_path + ".retired"):
-        shutil.rmtree(p, ignore_errors=True)
+    _recover_graph_commit(output_dir)
 
 
-def _recover_graph_commit(
-    output_dir: str, vertices_path: str, edges_path: str
-) -> None:
-    """Finish or discard a half-done graph commit before reading state.
-    An in-flight staged state file means a commit passed its commit point:
-    install whatever table stages remain and promote the state.  Without
-    one, leftover stage dirs were never committed — delete them; the run
-    will recompute against the intact live tables.
-
-    Namespace discipline: this protocol's stages are ``<table>.stage-run-*``
-    (run ids are ``run-<hex>``), and ONLY that pattern is touched here.
-    The streaming merge (streaming/graph_merge.py) stages as
-    ``<table>.stage-b<batch_id>`` with its own single-table protocol whose
-    commit point is the retire rename — its committed-but-uninstalled
-    stage must never be mistaken for this protocol's uncommitted garbage.
-    ``.retired`` dirs are safe to clear in BOTH protocols: each retires a
-    live dir only after its replacement is fully staged, so a retired copy
-    is superseded by construction."""
+def _recover_graph_commit(output_dir: str) -> None:
+    """Finish or discard a graph commit (_commit_graph).  A valid staged
+    state file means the commit passed its commit point: install every
+    table stage, delete the dropped snapshots' triples partitions and
+    promote the state to graph_state.json.  A torn one, or one whose JSON
+    root is not an object, means the commit never started.  Then delete
+    what no commit owns: uncommitted stages (a replay rebuilds them
+    against the intact live tables), retired copies (each superseded by
+    its installed stage) and a torn state temp file.  build_kg,
+    expire_snapshots and rollback_keep call this before anything else."""
     import glob
     import json
     import shutil
 
     stage_state = _graph_state_path(output_dir) + ".stage"
-    in_flight = False
+    state = None
     if os.path.isfile(stage_state):
         try:
             with open(stage_state) as f:
-                json.load(f)["partition_hashes"]
-            in_flight = True
-        except (ValueError, KeyError):
-            os.remove(stage_state)  # torn write: commit never started
-    if in_flight:
-        for live in (vertices_path, edges_path):
+                state = json.load(f)
+            state["partition_hashes"]
+        except (ValueError, KeyError, TypeError):
+            os.remove(stage_state)
+            state = None
+    lives = [os.path.join(output_dir, t) for t in GRAPH_TABLES]
+    if state is not None:
+        for live in lives:
             for s in sorted(glob.glob(glob.escape(live) + ".stage-run-*")):
                 _install_staged(s, live)
+        # .get: a state staged by an older build's merge has no such key
+        for snap in state.get("drop_snapshots", []):
+            shutil.rmtree(
+                os.path.join(output_dir, "triples", f"snap={snap}"),
+                ignore_errors=True,
+            )
         os.replace(stage_state, _graph_state_path(output_dir))
-    for live in (vertices_path, edges_path):
+    for live in lives:
         for s in glob.glob(glob.escape(live) + ".stage-run-*"):
             shutil.rmtree(s, ignore_errors=True)
         shutil.rmtree(live + ".retired", ignore_errors=True)
@@ -429,11 +430,11 @@ def fuse_write_partitioning(
 def triples_clustered_frame(
     triples: DataFrame, snap: str, n_buckets: int
 ) -> DataFrame:
-    """The no-exchange twin of triples_write_frame: attaches the per-row
-    constants and selects the table contract, relying on the clustering
-    laid down by fuse_write_partitioning (broadcast-mapping branch only —
-    a shuffling fallback join would destroy it, so build_kg routes that
-    branch through triples_write_frame instead).  Module-level so
+    """Attaches the per-row constants and selects the table contract with
+    no exchange, relying on the clustering below it: in the
+    broadcast-mapping branch the one laid down by fuse_write_partitioning,
+    in the fallback branch (a shuffling join would destroy that) the
+    salted repartition triples_write_frame puts under it.  Module-level so
     tests/test_write_plan.py can pin that its plan adds NO exchange."""
     bucket_hash = F.array(
         *[F.lit(partition_hash(snap, n_buckets, b)) for b in range(n_buckets)]
@@ -459,9 +460,10 @@ def triples_clustered_frame(
 def triples_write_frame(
     triples: DataFrame, snap: str, n_buckets: int, par: int
 ) -> DataFrame:
-    """The exact frame `build_kg` writes to the triples table: the salted
-    co-locating exchange with the per-row-constant columns attached ABOVE
-    it.  Module-level (not a closure) so tests can pin the two plan
+    """The exact frame `build_kg`'s fallback branch writes to the triples
+    table: the salted co-locating exchange, then triples_clustered_frame's
+    Project attaching the per-row-constant columns ABOVE it.
+    Module-level (not a closure) so tests can pin the two plan
     properties that matter at scale:
 
     - the Project computing `lineage`/`snap` sits above the Exchange —
@@ -481,29 +483,14 @@ def triples_write_frame(
     per bucket stay bounded by `sub`, not by task count.
     """
     sub = write_sub(n_buckets, par)
-    bucket_hash = F.array(
-        *[F.lit(partition_hash(snap, n_buckets, b)) for b in range(n_buckets)]
-    )
-    return (
+    return triples_clustered_frame(
         triples.repartition(
             n_buckets * sub,
             F.col("bucket"),
             F.pmod(F.xxhash64(F.lit(WRITE_SALT), F.col("conv_id")), F.lit(sub)),
-        )
-        .withColumn(
-            "lineage",
-            F.struct(
-                F.element_at(bucket_hash, F.col("bucket") + 1).alias(
-                    "partition_hash"
-                ),
-                F.lit(snap).alias("snapshot_id"),
-            ),
-        )
-        .withColumn("snap", F.lit(snap))
-        .select(
-            "conv_id", "turn_idx", "subj", "pred", "obj", "score",
-            "subj_id", "obj_id", "lineage", "bucket", "snap",
-        )
+        ),
+        snap,
+        n_buckets,
     )
 
 
@@ -639,20 +626,11 @@ def build_kg(
     vertices_path = os.path.join(output_dir, "vertices")
     edges_path = os.path.join(output_dir, "edges")
     metrics_path = os.path.join(output_dir, "metrics")
-    # a prior attempt may have crashed mid graph-commit, mid snapshot
-    # expiry, or mid compaction: finish or discard all three BEFORE
-    # reading graph_state / metrics / the raw triples table.  Expiry
-    # recovery runs before this function's own recovery so the blanket
-    # .retired cleanup never sees a half-installed expiry; compaction
-    # recovery runs before any raw triples read so crash remnants are
-    # never parsed as extra partitions.  (Lazy imports: expire.py imports
-    # this module's rename primitives.)
-    from .compact import recover_compaction
-    from .expire import recover_expire
-
-    recover_expire(output_dir)
+    # a prior build or expiry may have crashed mid graph commit, and a
+    # compaction mid swap: finish or discard both BEFORE reading
+    # graph_state / metrics / the raw triples table
+    _recover_graph_commit(output_dir)
     recover_compaction(output_dir)
-    _recover_graph_commit(output_dir, vertices_path, edges_path)
 
     raw = _bucketed(read_transcripts(spark, input_path), n_buckets)
     # the ingest guard below must probe the UNPRUNED scan: a crashed
@@ -884,7 +862,9 @@ def build_kg(
     # - merge: the graph holds OTHER, disjoint partitions (committed buckets
     #   of this snapshot on a partial resume, or a previous snapshot on a
     #   split ingest) -> incremental union-merge;
-    # - fresh: empty/na state -> plain overwrite.
+    # - fresh: empty/na state -> the graph resets to this run.
+    # Merge and fresh stage both tables and commit them with graph_state
+    # behind one commit point (_commit_graph).
     run_hashes = {partition_hash(snap, n_buckets, b) for b in run_buckets}
     included = _read_graph_state(output_dir)
     replayed = not run_hashes or run_hashes <= included
@@ -934,13 +914,15 @@ def build_kg(
         return int(obs.get["n"])
 
     if merge_mode:
+        # the plans read the prior files their stages replace (an Iceberg
+        # MERGE transaction on a real warehouse)
         vert_df = merge_vertices(spark.read.parquet(vertices_path), vertices)
         edge_df = merge_edges(spark.read.parquet(edges_path), edges)
-        vert_target = f"{vertices_path}.stage-{run_id}"
-        edge_target = f"{edges_path}.stage-{run_id}"
+        graph_hashes = included | run_hashes
     else:
-        vert_df, edge_df = vertices, edges
-        vert_target, edge_target = vertices_path, edges_path
+        vert_df, edge_df, graph_hashes = vertices, edges, run_hashes
+    vert_stage = f"{vertices_path}.stage-{run_id}"
+    edge_stage = f"{edges_path}.stage-{run_id}"
 
     t0 = time.monotonic()
     with cf.ThreadPoolExecutor(max_workers=3) as pool:
@@ -949,7 +931,7 @@ def build_kg(
         fv = (
             None
             if replayed
-            else pool.submit(_observed_write, vert_df, vert_target)
+            else pool.submit(_observed_write, vert_df, vert_stage)
         )
         ft.result()
         phases["write_triples"] = round(time.monotonic() - t0, 2)
@@ -964,23 +946,9 @@ def build_kg(
             n_vertices = _table_rows(spark, vertices_path)
             n_edges = _table_rows(spark, edges_path)
         else:
-            fe = pool.submit(_observed_write, edge_df, edge_target)
+            fe = pool.submit(_observed_write, edge_df, edge_stage)
             n_vertices, n_edges = fv.result(), fe.result()
-            if merge_mode:
-                # staged MERGE landing: the plans read the prior files they
-                # replace (an Iceberg MERGE transaction on a real warehouse);
-                # tables + state commit together behind one commit point
-                _commit_graph(
-                    output_dir,
-                    vert_target,
-                    vertices_path,
-                    edge_target,
-                    edges_path,
-                    included | run_hashes,
-                )
-            else:
-                # a fresh (non-merge) write resets the graph to this run
-                _write_graph_state(output_dir, run_hashes)
+            _commit_graph(output_dir, graph_hashes)
         metrics = lineage_rows(
             fc.result(), run_id, snap, n_buckets, run_buckets
         )

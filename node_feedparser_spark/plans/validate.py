@@ -1,7 +1,7 @@
 """Post-hoc integrity audit over a built KG output directory.
 
 The north rule's pipeline is resumable and incrementally merged
-(plans/pipeline.py, streaming/graph_merge.py); at warehouse scale the
+(plans/pipeline.py); at warehouse scale the
 operational question after every run is "is the graph still internally
 consistent?".  This module answers it with conserved-invariant checks that
 are all DataFrame-side aggregates — the audit collects only scalar counts

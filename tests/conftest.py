@@ -28,6 +28,26 @@ def corpus_path(tmp_path_factory):
     return str(p)
 
 
+@pytest.fixture()
+def crash_after_commit_point(monkeypatch):
+    """crash(output_dir, hashes, drop_snapshots): run
+    pipeline._commit_graph up to its commit point — the staged state file
+    lands — and stop before any table is installed, as a process killed
+    right there would."""
+    import node_feedparser_spark.plans.pipeline as pl
+
+    def crash(output_dir, hashes, drop_snapshots=()):
+        def killed(_):
+            raise RuntimeError("simulated crash after the commit point")
+
+        with monkeypatch.context() as m:
+            m.setattr(pl, "_recover_graph_commit", killed)
+            with pytest.raises(RuntimeError):
+                pl._commit_graph(output_dir, hashes, drop_snapshots)
+
+    return crash
+
+
 @pytest.fixture(scope="session")
 def count_jobs(spark):
     """count_jobs(fn): run fn(); return its result, the number of Spark

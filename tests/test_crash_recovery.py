@@ -1,27 +1,29 @@
-"""Crash-point recovery for the two graph commit protocols.
+"""Crash-point recovery for the graph commit (plans/pipeline.py
+_commit_graph / _recover_graph_commit).
 
-Both the batch pipeline's vertex/edge MERGE landing (plans/pipeline.py
-_commit_graph) and the streaming edge MERGE (streaming/graph_merge.py)
-emulate an atomic Iceberg commit on a local FS.  These tests inject a
-crash (os.replace raising) at each distinct point of the rename sequence
-and assert the protocol's contract: before the commit point a replay
-recomputes against intact live tables (no loss, no double count); after
-it, recovery FINISHES the commit idempotently (no loss, no re-merge).
+Every writer of vertices, edges and metrics — a build's merge or fresh
+write, snapshot expiry and rollback — lands its staged tables through this
+one commit, emulating an atomic Iceberg commit on a local FS.  These tests
+inject a crash (os.replace raising) at each distinct point of the rename
+sequence and assert the protocol's contract: before the commit point a
+replay recomputes against intact live tables (no loss, no double count);
+after it, recovery FINISHES the commit idempotently (no loss, no
+re-merge).
 
 Regression for the round-3 review findings: the old rmtree-then-replace
 swap could lose the only copy of the merged table, and the old
 swap-then-write-state ordering double-counted on a crash between them.
 """
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 import node_feedparser_spark.plans.pipeline as pl
-import node_feedparser_spark.streaming.graph_merge as gm
-from node_feedparser_spark.schemas import TRIPLES
-from node_feedparser_spark.streaming.graph_merge import merge_batch_into_edges
+from node_feedparser_spark.datagen import generate_transcripts
+from node_feedparser_spark.plans.validate import validate_kg
 
 
 # ---------- unit-level: _commit_graph / _recover_graph_commit ----------
@@ -44,7 +46,8 @@ def _fixture(tmp_path):
     vp, ep = os.path.join(out, "vertices"), os.path.join(out, "edges")
     _mk(vp, "v_old")
     _mk(ep, "e_old")
-    pl._write_graph_state(out, {"h_old"})
+    with open(os.path.join(out, "graph_state.json"), "w") as f:
+        json.dump({"partition_hashes": ["h_old"]}, f)
     vs, es = vp + ".stage-run-1", ep + ".stage-run-1"
     _mk(vs, "v_new")
     _mk(es, "e_new")
@@ -58,7 +61,7 @@ def _assert_clean(vp, ep, vs, es):
 
 def test_commit_graph_clean_path(tmp_path):
     out, vp, ep, vs, es = _fixture(tmp_path)
-    pl._commit_graph(out, vs, vp, es, ep, {"h_old", "h_new"})
+    pl._commit_graph(out, {"h_old", "h_new"})
     assert _tag(vp) == "v_new" and _tag(ep) == "e_new"
     assert pl._read_graph_state(out) == {"h_old", "h_new"}
     _assert_clean(vp, ep, vs, es)
@@ -91,16 +94,16 @@ def test_post_commit_point_crash_recovers_forward(
 
     monkeypatch.setattr(pl.os, "replace", failing)
     with pytest.raises(RuntimeError):
-        pl._commit_graph(out, vs, vp, es, ep, {"h_old", "h_new"})
+        pl._commit_graph(out, {"h_old", "h_new"})
     monkeypatch.setattr(pl.os, "replace", real)
 
     # past the commit point, recovery must FINISH the commit
-    pl._recover_graph_commit(out, vp, ep)
+    pl._recover_graph_commit(out)
     assert _tag(vp) == "v_new" and _tag(ep) == "e_new"
     assert pl._read_graph_state(out) == {"h_old", "h_new"}
     _assert_clean(vp, ep, vs, es)
     # recovery is idempotent
-    pl._recover_graph_commit(out, vp, ep)
+    pl._recover_graph_commit(out)
     assert _tag(vp) == "v_new" and _tag(ep) == "e_new"
 
 
@@ -115,140 +118,88 @@ def test_pre_commit_point_crash_rolls_back(tmp_path, monkeypatch):
 
     monkeypatch.setattr(pl.os, "replace", failing)
     with pytest.raises(RuntimeError):
-        pl._commit_graph(out, vs, vp, es, ep, {"h_old", "h_new"})
+        pl._commit_graph(out, {"h_old", "h_new"})
     monkeypatch.setattr(pl.os, "replace", real)
 
     # before the commit point nothing moved: live tables + state intact,
     # the uncommitted stages are garbage a replay will rebuild
-    pl._recover_graph_commit(out, vp, ep)
+    pl._recover_graph_commit(out)
     assert _tag(vp) == "v_old" and _tag(ep) == "e_old"
     assert pl._read_graph_state(out) == {"h_old"}
     _assert_clean(vp, ep, vs, es)
 
 
-# ---------- end-to-end: streaming edge merge crash-replay ----------
+# ---------- end-to-end: a split ingest crashed inside its commit ----------
 
 
-DROP1 = [
-    ("c1", 0, "a", "invokes", "b", 0.9, 1, 2),
-    ("c1", 1, "a", "invokes", "b", 0.5, 1, 2),
-    ("c2", 0, "b", "mentions", "c", 1.0, 2, 3),
-]
-DROP2 = [
-    ("c3", 0, "a", "invokes", "b", 0.25, 1, 2),
-    ("c3", 1, "c", "mentions", "a", 0.75, 3, 1),
-]
-
-MERGED = {
-    (1, "invokes", 2): 1.65,
-    (2, "mentions", 3): 1.0,
-    (3, "mentions", 1): 0.75,
-}
+def _split_ingest(spark, halves, out, n_buckets=4):
+    for p in halves:
+        pl.build_kg(spark, p, out, n_buckets=n_buckets)
 
 
-def _batch(spark, rows):
-    return spark.createDataFrame(
-        [
-            (c, t, s, p, o, sc, sid, oid, None)
-            for (c, t, s, p, o, sc, sid, oid) in rows
-        ],
-        TRIPLES,
-    ).select(
-        F.col("subj_id").alias("src_id"),
-        "pred",
-        F.col("obj_id").alias("dst_id"),
-        "score",
+def _graph_totals(spark, out):
+    report = validate_kg(spark, out)
+    weight = (
+        spark.read.parquet(os.path.join(out, "edges"))
+        .agg(F.sum("weight"))
+        .collect()[0][0]
     )
+    return report, (report["n_vertices"], report["n_edges"], round(weight, 4))
 
 
-def _edges_map(spark, path):
-    return {
-        (r["src_id"], r["pred"], r["dst_id"]): round(r["weight"], 6)
-        for r in spark.read.parquet(path).collect()
-    }
+@pytest.fixture(scope="module")
+def small_halves(spark, tmp_path_factory):
+    """A small corpus split in two by conv_id, and the graph totals of an
+    uncrashed split ingest of it."""
+    base = tmp_path_factory.mktemp("commit_crash")
+    pdf = generate_transcripts(seed=42, scale=0.3)
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    mask = pdf["conv_id"].map(lambda c: (sum(c.encode()) % 2) == 0)
+    halves = []
+    for i, half in enumerate((pdf[mask], pdf[~mask])):
+        p = str(base / f"half{i}.parquet")
+        half.to_parquet(p, index=False)
+        halves.append(p)
+    ref = str(base / "kg_ref")
+    _split_ingest(spark, halves, ref)
+    return halves, _graph_totals(spark, ref)[1]
 
 
-@pytest.mark.parametrize("crash_on_install", [True, False])
-def test_stream_merge_crash_replay(
-    spark, tmp_path, monkeypatch, crash_on_install
+@pytest.mark.parametrize(
+    "fail_when",
+    [
+        # before the commit point: the staged state never lands
+        lambda src, dst: dst.endswith("graph_state.json.stage"),
+        # after it: vertices installed, crash installing the edges stage
+        lambda src, dst: ".stage-run-" in os.path.basename(src)
+        and os.path.basename(dst) == "edges",
+    ],
+    ids=["before_commit_point", "after_commit_point"],
+)
+def test_split_ingest_crash_in_graph_commit_resumes(
+    spark, tmp_path, monkeypatch, small_halves, fail_when
 ):
-    """Crash between the retire rename and the install rename (the old
-    protocol's silent-loss window) — and before the retire — must both
-    replay to the full merged aggregate, never to one batch's delta."""
-    edges = str(tmp_path / "edges")
-    assert merge_batch_into_edges(spark, _batch(spark, DROP1), 0, edges)
+    """The second half of a split ingest (a merge) crashes inside its
+    graph commit; rerunning build_kg recovers — a recompute before the
+    commit point, a finished commit and no re-merge after it — to the
+    graph an uncrashed split ingest builds."""
+    (first, second), want = small_halves
+    out = str(tmp_path / "kg")
+    pl.build_kg(spark, first, out, n_buckets=4)
     real = os.replace
 
     def failing(src, dst):
-        s = str(src)
-        if crash_on_install:
-            # retire succeeded; crash installing the staged merge
-            if s.endswith(".stage-b1"):
-                raise RuntimeError("simulated crash")
-        else:
-            # crash retiring the live table; stage complete but uncommitted
-            if s == edges:
-                raise RuntimeError("simulated crash")
+        if fail_when(str(src), str(dst)):
+            raise RuntimeError("simulated crash")
         return real(src, dst)
 
-    monkeypatch.setattr(gm.os, "replace", failing)
+    monkeypatch.setattr(pl.os, "replace", failing)
     with pytest.raises(RuntimeError):
-        merge_batch_into_edges(spark, _batch(spark, DROP2), 1, edges)
-    monkeypatch.setattr(gm.os, "replace", real)
+        pl.build_kg(spark, second, out, n_buckets=4)
+    monkeypatch.setattr(pl.os, "replace", real)
+    spark.catalog.clearCache()  # the crashed run's extraction cache
 
-    if crash_on_install:
-        # the live dir is retired: the staged dir is the committed table,
-        # so the replay must be a no-op finish, not a re-merge
-        assert not os.path.isdir(edges)
-        assert (
-            merge_batch_into_edges(spark, _batch(spark, DROP2), 1, edges)
-            is False
-        )
-    else:
-        # not yet committed: the replay re-merges against the intact table
-        assert os.path.isdir(edges)
-        assert (
-            merge_batch_into_edges(spark, _batch(spark, DROP2), 1, edges)
-            is True
-        )
-    got = _edges_map(spark, edges)
-    assert got == {k: pytest.approx(v) for k, v in MERGED.items()}
-    assert gm._last_batch(edges) == 1
-    # replay of the applied batch stays a no-op and leaves no leftovers
-    assert (
-        merge_batch_into_edges(spark, _batch(spark, DROP2), 1, edges) is False
-    )
-    assert not os.path.isdir(edges + ".retired")
-    assert not os.path.isdir(edges + ".stage-b1")
-
-
-# ---------- cross-protocol namespace isolation ----------
-
-
-def test_batch_recovery_ignores_streaming_stages(tmp_path):
-    """_recover_graph_commit must not destroy the streaming merge's
-    committed-but-uninstalled stage: `edges.stage-b<N>` belongs to a
-    DIFFERENT protocol (streaming/graph_merge.py) whose commit point is
-    the retire rename — to the batch protocol it is someone else's
-    committed table, not uncommitted garbage."""
-    import json
-
-    out = str(tmp_path / "kg")
-    os.makedirs(out)
-    vp, ep = os.path.join(out, "vertices"), os.path.join(out, "edges")
-    _mk(vp, "v_live")
-    # streaming crash state: live edges retired away, complete stage pending
-    stream_stage = ep + ".stage-b3"
-    _mk(stream_stage, "e_stream_committed")
-    with open(os.path.join(stream_stage, gm._STATE_NAME), "w") as f:
-        json.dump({"last_batch_id": 3}, f)
-    _mk(ep + ".retired", "e_superseded")
-
-    pl._recover_graph_commit(out, vp, ep)
-    # the streaming stage survives; only the superseded retired copy goes
-    assert _tag(stream_stage) == "e_stream_committed"
-    assert not os.path.exists(ep + ".retired")
-    # streaming recovery can still finish its own install afterwards
-    gm._recover(ep)
-    assert _tag(ep) == "e_stream_committed"
-    assert gm._last_batch(ep) == 3
+    pl.build_kg(spark, second, out, n_buckets=4)
+    report, got = _graph_totals(spark, out)
+    assert report["ok"], report
+    assert got == want

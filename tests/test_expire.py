@@ -1,10 +1,10 @@
 """Snapshot expiry: conserved invariants after expiry, idempotence,
-round-trip re-ingest, crash recovery of the three-table commit,
-uncommitted-partition exclusion, and the degenerate last-snapshot case
-(plans/expire.py)."""
+round-trip re-ingest, crash recovery of its graph commit (the three staged
+tables and the partition delete behind pipeline._commit_graph),
+uncommitted-partition exclusion, and the degenerate last-snapshot and
+crashed-first-commit cases (plans/expire.py)."""
 
 import glob
-import json
 import os
 import shutil
 
@@ -12,13 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from node_feedparser_spark.plans.expire import (
-    _expire_state_path,
     _stage_expiry,
-    _write_expire_state,
     expire_snapshot,
-    recover_expire,
+    rollback_keep,
 )
-from node_feedparser_spark.plans.pipeline import build_kg
+from node_feedparser_spark.plans.pipeline import (
+    _recover_graph_commit,
+    build_kg,
+)
 from node_feedparser_spark.plans.validate import validate_kg
 from node_feedparser_spark.sources.transcripts import snapshot
 
@@ -39,6 +40,10 @@ def split_kg(spark, corpus_pdf, tmp_path):
         paths.append(p)
         snaps.append(snapshot(p)[0])
     return out, snaps[0], snaps[1], paths[0], paths[1]
+
+
+def _stage_state(out):
+    return os.path.join(out, "graph_state.json.stage")
 
 
 def _snap_dirs(out):
@@ -174,13 +179,13 @@ def test_expire_excludes_uncommitted_partitions(spark, split_kg):
 
 
 def test_recover_preserves_precommit_state(spark, split_kg):
-    """Stages without a committed expire-state are uncommitted garbage:
+    """Stages without a committed state file are uncommitted garbage:
     recovery drops them and the live graph is untouched."""
     out, snap_a, _, _, _ = split_kg
     before = validate_kg(spark, out)
-    stage = os.path.join(out, "edges.stage-expire-deadbeef")
+    stage = os.path.join(out, "edges.stage-run-deadbeef")
     os.makedirs(stage)
-    recover_expire(out)
+    _recover_graph_commit(out)
     assert not os.path.isdir(stage)
     after = validate_kg(spark, out)
     assert after["n_fail"] == 0
@@ -188,71 +193,77 @@ def test_recover_preserves_precommit_state(spark, split_kg):
 
 
 def test_recover_rejects_torn_state_file(spark, split_kg):
-    """A torn or non-conforming expire-state file (including a JSON root
+    """A torn or non-conforming staged state file (including a JSON root
     that is not an object) means the commit never started: recovery
     removes it and the graph is untouched."""
     out = split_kg[0]
     for payload in ('{"partition_hashes": [', '["snap-x"]', '"oops"'):
-        with open(_expire_state_path(out), "w") as f:
+        with open(_stage_state(out), "w") as f:
             f.write(payload)
-        recover_expire(out)
-        assert not os.path.isfile(_expire_state_path(out))
+        _recover_graph_commit(out)
+        assert not os.path.isfile(_stage_state(out))
     report = validate_kg(spark, out)
     assert report["n_fail"] == 0
 
 
-def test_recover_finishes_postcommit_crash(spark, split_kg):
+def test_recover_finishes_postcommit_crash(
+    spark, split_kg, crash_after_commit_point
+):
     """Crash immediately after the commit point (state staged, nothing
     installed, triples not yet deleted): recovery must finish the expiry
-    and leave an audit-green graph.  Stages come from the SAME
-    _stage_expiry the product runs, so the test cannot drift from it."""
+    and leave an audit-green graph.  Stages and state come from the SAME
+    _stage_expiry and _commit_graph the product runs, so the test cannot
+    drift from them."""
     out, snap_a, snap_b, _, _ = split_kg
     remaining_hashes = _remaining_hashes(spark, out, snap_a)
-    _stage_expiry(spark, out, snap_a, remaining_hashes, "cafe01")
-    _write_expire_state(out, remaining_hashes, snap_a)
-    # crash here; next build_kg (or expire) run recovers
-    recover_expire(out)
+    _stage_expiry(spark, out, [snap_a], remaining_hashes, "cafe01")
+    crash_after_commit_point(out, remaining_hashes, [snap_a])
+    # next build_kg (or expire) run recovers
+    _recover_graph_commit(out)
     assert _snap_dirs(out) == [f"snap={snap_b}"]
-    assert not os.path.isfile(_expire_state_path(out))
+    assert not os.path.isfile(_stage_state(out))
     report = validate_kg(spark, out)
     assert report["n_fail"] == 0, report
 
 
-def test_recover_finishes_halfinstalled_crash(spark, split_kg):
+def test_recover_finishes_halfinstalled_crash(
+    spark, split_kg, crash_after_commit_point
+):
     """Crash mid-install (edges installed, vertices retired with its stage
     pending, triples deleted): every remaining step is an idempotent
     rename, so recovery finishes cleanly."""
     out, snap_a, snap_b, _, _ = split_kg
     remaining_hashes = _remaining_hashes(spark, out, snap_a)
-    staged = _stage_expiry(spark, out, snap_a, remaining_hashes, "cafe02")[0]
-    _write_expire_state(out, remaining_hashes, snap_a)
+    _stage_expiry(spark, out, [snap_a], remaining_hashes, "cafe02")
+    crash_after_commit_point(out, remaining_hashes, [snap_a])
     # hand-run part of the post-commit sequence, then "crash":
     # edges fully installed...
     edges_live = os.path.join(out, "edges")
     os.replace(edges_live, edges_live + ".retired")
-    os.replace(staged["edges"], edges_live)
+    os.replace(edges_live + ".stage-run-cafe02", edges_live)
     # ...vertices retired but its stage NOT yet installed...
     vert_live = os.path.join(out, "vertices")
     os.replace(vert_live, vert_live + ".retired")
     # ...and the expired triples partition already deleted
     shutil.rmtree(os.path.join(out, "triples", f"snap={snap_a}"))
 
-    recover_expire(out)
+    _recover_graph_commit(out)
     assert os.path.isdir(vert_live)
-    assert not os.path.isfile(_expire_state_path(out))
+    assert not os.path.isfile(_stage_state(out))
     assert _snap_dirs(out) == [f"snap={snap_b}"]
     report = validate_kg(spark, out)
     assert report["n_fail"] == 0, report
 
 
-def test_build_kg_recovers_crashed_expiry(spark, split_kg):
+def test_build_kg_recovers_crashed_expiry(
+    spark, split_kg, crash_after_commit_point
+):
     """build_kg on a dir holding a committed-but-unfinished expiry first
-    finishes the expiry, then ingests — the lazy-import wiring in
-    pipeline.py."""
+    finishes the expiry (its one graph-commit recovery), then ingests."""
     out, snap_a, snap_b, path_a, _ = split_kg
     remaining_hashes = _remaining_hashes(spark, out, snap_a)
-    _stage_expiry(spark, out, snap_a, remaining_hashes, "cafe03")
-    _write_expire_state(out, remaining_hashes, snap_a)
+    _stage_expiry(spark, out, [snap_a], remaining_hashes, "cafe03")
+    crash_after_commit_point(out, remaining_hashes, [snap_a])
     # crash; now a plain build of A runs: expiry finishes first, so A is
     # fully re-ingested (no committed buckets) and the result audits green
     summary = build_kg(spark, path_a, out, n_buckets=4)
@@ -271,6 +282,28 @@ def test_expire_last_snapshot_then_fresh_build(spark, corpus_path, tmp_path):
     assert _snap_dirs(out) == []
     assert spark.read.parquet(os.path.join(out, "metrics")).count() == 0
     # the dir is reusable: a fresh build lands and audits green
+    rebuilt = build_kg(spark, corpus_path, out, n_buckets=4)
+    assert rebuilt["n_triples"] > 0
+    report = validate_kg(spark, out)
+    assert report["n_fail"] == 0, report
+
+
+def test_rollback_after_crash_in_first_metrics_commit(
+    spark, corpus_path, tmp_path
+):
+    """A crash inside the first metrics commit leaves `metrics/` holding
+    only `_temporary/`.  Rollback (and expiry under it) read that as no
+    commits, with the declared schema, instead of failing schema
+    inference, and retire the stranded snapshot; the dir is reusable."""
+    out = str(tmp_path / "kg")
+    build_kg(spark, corpus_path, out, n_buckets=4)
+    metrics = os.path.join(out, "metrics")
+    shutil.rmtree(metrics)
+    os.makedirs(os.path.join(metrics, "_temporary", "0"))
+    summary = rollback_keep(spark, out, [])
+    assert not summary["noop"]
+    assert _snap_dirs(out) == []
+    assert spark.read.parquet(metrics).count() == 0
     rebuilt = build_kg(spark, corpus_path, out, n_buckets=4)
     assert rebuilt["n_triples"] > 0
     report = validate_kg(spark, out)

@@ -19,7 +19,6 @@ TEST_ONLY = {
     f"{PKG}.operators.extract_jvm",
     f"{PKG}.streaming.burst_stream",
     f"{PKG}.streaming.elo_stream",
-    f"{PKG}.streaming.graph_merge",
 }
 
 

@@ -1,7 +1,7 @@
 """Snapshot rollback (plans/expire.py rollback_keep / expire_snapshots):
 multi-snapshot retire in ONE transaction, equivalence of the surviving
 graph to a single-ingest build, unknown-keep refusal, idempotence, and
-crash recovery of the list-valued expire state."""
+crash recovery of a multi-snapshot graph commit."""
 
 import glob
 import json
@@ -11,14 +11,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from node_feedparser_spark.plans.expire import (
-    _expire_state_path,
     _stage_expiry,
-    _write_expire_state,
     expire_snapshots,
-    recover_expire,
     rollback_keep,
 )
-from node_feedparser_spark.plans.pipeline import build_kg
+from node_feedparser_spark.plans.pipeline import (
+    _recover_graph_commit,
+    build_kg,
+)
 from node_feedparser_spark.plans.validate import validate_kg
 from node_feedparser_spark.sources.transcripts import snapshot
 
@@ -156,8 +156,10 @@ def test_rollback_retires_stranded_uncommitted_snapshot(spark, three_snap_kg):
     assert report["n_fail"] == 0, report
 
 
-def test_recover_finishes_postcommit_multi_expire_crash(spark, three_snap_kg):
-    """Crash immediately after the commit point of a LIST-valued expiry
+def test_recover_finishes_postcommit_multi_expire_crash(
+    spark, three_snap_kg, crash_after_commit_point
+):
+    """Crash immediately after the commit point of a multi-snapshot expiry
     (state staged, nothing installed, no partition deleted): recovery must
     delete BOTH retired snapshots and leave an audit-green graph."""
     out, snaps, _ = three_snap_kg
@@ -171,13 +173,14 @@ def test_recover_finishes_postcommit_multi_expire_crash(spark, three_snap_kg):
         .collect()
     )
     _stage_expiry(spark, out, drop, remaining_hashes, "cafe11")
-    _write_expire_state(out, remaining_hashes, drop)
-    # crash here — state file carries a LIST in expired_snapshot
-    with open(_expire_state_path(out)) as f:
-        assert isinstance(json.load(f)["expired_snapshot"], list)
-    recover_expire(out)
+    crash_after_commit_point(out, remaining_hashes, drop)
+    # the committed state file names both dropped snapshots
+    state = os.path.join(out, "graph_state.json.stage")
+    with open(state) as f:
+        assert json.load(f)["drop_snapshots"] == drop
+    _recover_graph_commit(out)
     assert _snap_dirs(out) == [f"snap={snaps[0]}"]
-    assert not os.path.isfile(_expire_state_path(out))
+    assert not os.path.isfile(state)
     report = validate_kg(spark, out)
     assert report["n_fail"] == 0, report
 
