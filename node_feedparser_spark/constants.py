@@ -90,12 +90,8 @@ ENTITY = rf"{ENTITY_WORD}(?: {ENTITY_WORD})*"
 # The analog of the reference's fixed normalization rules: a closed set of
 # wire patterns mapping onto one canonical record shape
 # (lib/feedparser.js:487-834).
-# Raw pattern strings are exported alongside the compiled forms: the JVM
-# fast path (operators/extract_jvm.py) hands the SAME source strings to
-# Java regex — the grammar is pure ASCII, where Python `re` and
-# java.util.regex agree match-for-match.
-RELATION_PATTERN_STRINGS: list[tuple[str, str]] = [
-    (pred, rf"\b({ENTITY}) {phrase} ({ENTITY})")
+RELATION_PATTERNS: list[tuple[str, re.Pattern[str]]] = [
+    (pred, re.compile(rf"\b({ENTITY}) {phrase} ({ENTITY})"))
     for pred, phrase in [
         ("is_a", r"is an?"),
         ("part_of", r"is part of"),
@@ -108,12 +104,7 @@ RELATION_PATTERN_STRINGS: list[tuple[str, str]] = [
     ]
 ]
 
-RELATION_PATTERNS: list[tuple[str, re.Pattern[str]]] = [
-    (pred, re.compile(raw)) for pred, raw in RELATION_PATTERN_STRINGS
-]
-
-ENTITY_RE_STRING = rf"\b{ENTITY}\b"
-ENTITY_RE = re.compile(ENTITY_RE_STRING)
+ENTITY_RE = re.compile(rf"\b{ENTITY}\b")
 
 # Scores carried on emitted triples (used by the link-score histogram in the
 # metrics table — the analog of the reference's errors side channel,

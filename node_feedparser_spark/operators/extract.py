@@ -80,8 +80,7 @@ MAX_TEXT_BYTES = 16 * 1024 * 1024
 # Rows whose text contains any of these need the exact per-row path:
 # control chars (normalize_text strips them), '<' (whitelist HTML strip),
 # mojibake markers (encoding repair), exotic unicode whitespace (Python
-# str.strip() vs plain trim), DEL.  Mirror of extract_jvm._DIRTY_TEXT_RE
-# plus the mojibake alternation.  tool needs NO screen here: the
+# str.strip() vs plain trim), DEL.  tool needs NO screen here: the
 # vectorized path applies Python str.strip() to it, which is the spec.
 _DIRTY_RE = re.compile(
     "[\x00-\x08\x0b\x0c\x0e-\x1f\x7f<"

@@ -273,8 +273,7 @@ def bradley_terry(
 
 
 # ---------------------------------------------------------------------------
-# Elo: order-dependent sequential rating (batch face; streaming twin in
-# streaming/elo_stream.py)
+# Elo: order-dependent sequential rating
 # ---------------------------------------------------------------------------
 
 #: classic Elo parameters (Elo 1978; chess federation defaults)
@@ -297,8 +296,7 @@ def elo_fold(
     base: float = ELO_BASE,
     state: dict | None = None,
 ) -> dict:
-    """Sequential Elo fold shared by the batch and streaming faces — THE
-    semantics, so stream==batch parity is structural, not coincidental.
+    """Sequential Elo fold — THE semantics; elo_ratings runs it per pool.
 
     ``rows``: (seq, winner, loser) tuples; processed in ascending seq with
     (winner, loser) as the tie-break so duplicate seqs inside ONE call stay
@@ -307,13 +305,12 @@ def elo_fold(
     to max(seq) over ALL rows seen (including skipped self-comparisons and
     replays), and the replay guard drops anything at or below it; two rows
     sharing a seq are therefore both applied when they arrive in the same
-    call but the second is silently dropped when a micro-batch boundary
-    splits them.  With unique seqs the fold is batch-split-invariant
-    (pinned by the streaming-parity tests); with duplicate seqs it is not.
+    call but the second is silently dropped when a call boundary splits
+    them.  With unique seqs the fold is split-invariant; with duplicate
+    seqs it is not.
     ``state``: optional {"ratings": {player: rating}, "games": {player: n},
-    "wins": {player: n}, "last_seq": int} carried across calls (the
-    streaming face's state-store payload).  Rows at or below last_seq are
-    ignored — a replayed micro-batch cannot double-apply.
+    "wins": {player: n}, "last_seq": int} carried across calls.  Rows at
+    or below last_seq are ignored — a replayed batch cannot double-apply.
 
     After each comparison the standard update runs with ratings rounded
     HALF_UP at 6 dp (expected score E = 1/(1+10^((r_l-r_w)/scale)),
@@ -356,15 +353,13 @@ def elo_ratings(
     of bradley_terry: each comparison moves two ratings immediately, so
     early results matter less than late ones (rating drift, momentum) and
     no closed-form or SQL replay exists (declared rows-only at the
-    driver; pinned by the shared-fold hand cases and the streaming-parity
-    tests instead).
+    driver; pinned by the fold hand cases instead).
 
     Pools (leagues / prompt domains / annotator cohorts) are independent
     rating universes: the fold runs per pool inside one applyInPandas —
     inherently sequential WITHIN a pool (that is Elo's semantics), scaled
     ACROSS pools by the grouping.  A pool's comparison history must fit
-    one task by contract (bounded players and games per pool — the same
-    contract the state-store streaming twin carries).
+    one task by contract (bounded players and games per pool).
 
     Returns (pool, player, rating, n_games, wins).
     """

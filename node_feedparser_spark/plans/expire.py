@@ -57,6 +57,7 @@ from .pipeline import (
     _commit_graph,
     _recover_graph_commit,
     committed_partitions,
+    edges_of,
     resolve_alias_ownership,
 )
 
@@ -89,14 +90,7 @@ def _stage_expiry(
         .filter(F.col("lineage.partition_hash").isin(remaining_hashes))
         .cache()
     )
-    edges_new = (
-        remaining.groupBy("subj_id", "pred", "obj_id")
-        .agg(F.round(F.sum("score"), 6).alias("weight"))
-        .select(
-            F.col("subj_id").alias("src_id"), "pred",
-            F.col("obj_id").alias("dst_id"), "weight",
-        )
-    )
+    edges_new = edges_of(remaining)
     mentions = (
         remaining.select(
             F.explode(F.array("subj_id", "obj_id")).alias("entity_id")

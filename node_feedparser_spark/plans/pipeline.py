@@ -107,6 +107,21 @@ def _table_rows(spark: SparkSession, path: str) -> int:
     return spark.read.parquet(path).count()
 
 
+def edges_of(triples: DataFrame) -> DataFrame:
+    """The edge aggregate of a triples frame: one edge per (subj_id, pred,
+    obj_id) weighing round(sum(score), 6).  The build and expiry both
+    derive edges here; validate_kg's weight tolerance assumes this
+    per-edge round(6)."""
+    return (
+        triples.groupBy("subj_id", "pred", "obj_id")
+        .agg(F.round(F.sum("score"), 6).alias("weight"))
+        .select(
+            F.col("subj_id").alias("src_id"), "pred",
+            F.col("obj_id").alias("dst_id"), "weight",
+        )
+    )
+
+
 def merge_edges(prior: DataFrame, new: DataFrame) -> DataFrame:
     """Incremental edge merge: prior and new cover DISJOINT bucket sets, so
     summing weights per (src, pred, dst) is exactly the full-recompute
@@ -725,245 +740,243 @@ def build_kg(
         n_buckets,
     )
     extracted.cache()
+    # a build that raises must not leave a corpus-sized cache behind in
+    # the session; the writer pool below has joined before this unpersists
+    cached = [extracted]
+    try:
+        triples_ok = extracted.filter(F.col("pred") != ERROR_PRED)
+        errors = extracted.filter(F.col("pred") == ERROR_PRED)
 
-    triples_ok = extracted.filter(F.col("pred") != ERROR_PRED)
-    errors = extracted.filter(F.col("pred") == ERROR_PRED)
-
-    # --- canonicalization over surface forms (distinct + counted first:
-    # mentions >> distinct surfaces, so the expensive stages see small input)
-    surfaces = (
-        triples_ok.select(F.explode(F.array("subj", "obj")).alias("surface"))
-        .groupBy("surface")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-    )
-    # canonicalize() materializes extraction eagerly (its first job
-    # collects the distinct surfaces, filling the extraction cache), so
-    # time it as a phase
-    t0 = time.monotonic()
-    decisions: dict = {
-        "input_bytes": input_bytes,
-        "exchange_partitions": n_partitions,
-    }
-    mapping, vertices = canonicalize(spark, surfaces, decisions)
-    phases["extract_canonicalize"] = round(time.monotonic() - t0, 2)
-
-    m_subj = mapping.withColumnRenamed("surface", "subj").withColumnRenamed(
-        "entity_id", "subj_id"
-    )
-    m_obj = mapping.withColumnRenamed("surface", "obj").withColumnRenamed(
-        "entity_id", "obj_id"
-    )
-    # hybrid join strategy, same reasoning as components._local_cc: distinct
-    # surfaces ≪ mentions, so the surface->entity mapping usually fits a
-    # broadcast (no shuffle/sort of the full triple set, measured 2x on the
-    # join+write path).  The gate is an ESTIMATED BYTE size, not a row
-    # count: canonicalize records it in decisions (string bytes + ~48 B/row
-    # of object+hash overhead) from the surfaces it collected.  Broadcasting
-    # is forced only under 64 MB estimated — far below executor budgets
-    # even with the 2x hint (subj + obj); 1 M surfaces of 6-13 characters
-    # estimate 57 MB, so a larger or longer-surfaced set passes it.  Past
-    # the gate we do NOT hint and let AQE convert the join
-    # at runtime if the post-shuffle size qualifies; the worst case is a
-    # sort-merge join that shuffles the triple set twice (subj then obj) —
-    # correct, just ~2x slower on the join+write path at fixture scale.
-    # Forced-broadcast joins are partition-preserving, so the (bucket,
-    # wsalt) clustering from fuse_write_partitioning still holds at the
-    # write and the triples need no second shuffle; past the gate the join
-    # may shuffle, so the write falls back to the salted repartition.
-    # Measured past the gate (1.5 M surfaces, 90 MB estimated, 5 M triples,
-    # local[4] on 4 vCPUs, 4 alternating pairs): forcing the broadcast
-    # there completes, but the write and both aggregates each rebuild and
-    # probe the two 1.5 M-row hash relations, so it used more CPU in 3 of
-    # 4 pairs (medians 252 vs 240 CPU-s) and ~20 % more wall time than
-    # this fallback, which joins once into the triples cache
-    clustered_write = decisions["mapping_bytes"] <= 64 * 1024 * 1024
-    decisions["clustered_write"] = clustered_write
-    if clustered_write:
-        m_subj, m_obj = F.broadcast(m_subj), F.broadcast(m_obj)
-    # NOTE lineage/snap are NOT part of this frame: both are per-row
-    # constants derivable from `bucket`, and attaching them here would (a)
-    # ship ~90 B/row of redundant low-cardinality strings through the
-    # write's repartition shuffle — roughly doubling shuffle bytes on rows
-    # whose real payload is ~100-130 B — and (b) bloat the fallback
-    # branch's triples cache.  _write_triples attaches them AFTER the
-    # exchange, where they cost one dictionary-encoded parquet column.
-    triples = (
-        triples_ok.join(m_subj, "subj")
-        .join(m_obj, "obj")
-        .select(
-            "conv_id", "turn_idx", "subj", "pred", "obj", "score",
-            "subj_id", "obj_id", "bucket",
+        # --- canonicalization over surface forms (distinct + counted first:
+        # mentions >> distinct surfaces, so the expensive stages see small input)
+        surfaces = (
+            triples_ok.select(F.explode(F.array("subj", "obj")).alias("surface"))
+            .groupBy("surface")
+            .agg(F.count(F.lit(1)).alias("n_mentions"))
         )
-    )
-    # the broadcast branch keeps ONE corpus-sized cache, the extraction:
-    # the write and the aggregates each re-derive the triples from it with
-    # two broadcast hash probes, cheaper than caching a second copy.  The
-    # fallback branch's joins shuffle, so there the triples are cached
-    if not clustered_write:
-        triples.cache()
+        # canonicalize() materializes extraction eagerly (its first job
+        # collects the distinct surfaces, filling the extraction cache), so
+        # time it as a phase
+        t0 = time.monotonic()
+        decisions: dict = {
+            "input_bytes": input_bytes,
+            "exchange_partitions": n_partitions,
+        }
+        mapping, vertices = canonicalize(spark, surfaces, decisions)
+        phases["extract_canonicalize"] = round(time.monotonic() - t0, 2)
 
-    edges = (
-        triples.groupBy("subj_id", "pred", "obj_id")
-        .agg(F.round(F.sum("score"), 6).alias("weight"))
-        .select(
-            F.col("subj_id").alias("src_id"), "pred",
-            F.col("obj_id").alias("dst_id"), "weight",
+        m_subj = mapping.withColumnRenamed("surface", "subj").withColumnRenamed(
+            "entity_id", "subj_id"
         )
-    )
-
-    # --- metrics: per-bucket lineage + fixed-width link-score histogram,
-    # collected as one small aggregate and built into rows on the driver
-    counts = lineage_counts(triples, errors, turn_counts)
-    run_buckets = [b for b in range(n_buckets) if b not in set(skipped)]
-
-    # --- materialize: data first, metrics (the commit marker) last, so a
-    # crash mid-write is re-done on resume rather than falsely committed.
-    # In the fallback branch the triples write IS the cache
-    # materialization: the cache sits below the write's repartition, so
-    # one pass computes the join, populates the cache for the downstream
-    # aggregates, and lands the data.
-    def _write_triples() -> None:
-        # bucket co-location for the partitioned write (without it every
-        # task writes a file per bucket — tasks x buckets small files, a
-        # metadata storm at cluster scale):
-        # - broadcast branch (the common case): already physically
-        #   clustered by fuse_write_partitioning's (bucket, wsalt)
-        #   exchange, which extraction and the forced-broadcast joins
-        #   preserved — triples_clustered_frame attaches the per-row
-        #   constants and writes with NO repartition of the triple payload
-        #   (this second full shuffle was the write phase's scaling
-        #   residual);
-        # - fallback (mapping too big to force): the join may shuffle and
-        #   destroy the clustering, so triples_write_frame re-establishes
-        #   it with the salted sub-split repartition (salt decorrelated
-        #   from the bucket hash; lineage/snap attached ABOVE the
-        #   exchange).  Both frames' plan properties are pinned by
-        #   tests/test_write_plan.py.
-        # DYNAMIC partition overwrite on (snap, bucket) makes a
-        # crash-replayed bucket REPLACE its partition instead of appending
-        # duplicates, and leaves other snapshots' partitions untouched.
-        frame = (
-            triples_clustered_frame(triples, snap, n_buckets)
-            if clustered_write
-            else triples_write_frame(triples, snap, n_buckets, par)
+        m_obj = mapping.withColumnRenamed("surface", "obj").withColumnRenamed(
+            "entity_id", "obj_id"
         )
-        (
-            frame.write.partitionBy("snap", "bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(triples_path)
+        # hybrid join strategy, same reasoning as components._local_cc: distinct
+        # surfaces ≪ mentions, so the surface->entity mapping usually fits a
+        # broadcast (no shuffle/sort of the full triple set, measured 2x on the
+        # join+write path).  The gate is an ESTIMATED BYTE size, not a row
+        # count: canonicalize records it in decisions (string bytes + ~48 B/row
+        # of object+hash overhead) from the surfaces it collected.  Broadcasting
+        # is forced only under 64 MB estimated — far below executor budgets
+        # even with the 2x hint (subj + obj); 1 M surfaces of 6-13 characters
+        # estimate 57 MB, so a larger or longer-surfaced set passes it.  Past
+        # the gate we do NOT hint and let AQE convert the join
+        # at runtime if the post-shuffle size qualifies; the worst case is a
+        # sort-merge join that shuffles the triple set twice (subj then obj) —
+        # correct, just ~2x slower on the join+write path at fixture scale.
+        # Forced-broadcast joins are partition-preserving, so the (bucket,
+        # wsalt) clustering from fuse_write_partitioning still holds at the
+        # write and the triples need no second shuffle; past the gate the join
+        # may shuffle, so the write falls back to the salted repartition.
+        # Measured past the gate (1.5 M surfaces, 90 MB estimated, 5 M triples,
+        # local[4] on 4 vCPUs, 4 alternating pairs): forcing the broadcast
+        # there completes, but the write and both aggregates each rebuild and
+        # probe the two 1.5 M-row hash relations, so it used more CPU in 3 of
+        # 4 pairs (medians 252 vs 240 CPU-s) and ~20 % more wall time than
+        # this fallback, which joins once into the triples cache
+        clustered_write = decisions["mapping_bytes"] <= 64 * 1024 * 1024
+        decisions["clustered_write"] = clustered_write
+        if clustered_write:
+            m_subj, m_obj = F.broadcast(m_subj), F.broadcast(m_obj)
+        # NOTE lineage/snap are NOT part of this frame: both are per-row
+        # constants derivable from `bucket`, and attaching them here would (a)
+        # ship ~90 B/row of redundant low-cardinality strings through the
+        # write's repartition shuffle — roughly doubling shuffle bytes on rows
+        # whose real payload is ~100-130 B — and (b) bloat the fallback
+        # branch's triples cache.  _write_triples attaches them AFTER the
+        # exchange, where they cost one dictionary-encoded parquet column.
+        triples = (
+            triples_ok.join(m_subj, "subj")
+            .join(m_obj, "obj")
+            .select(
+                "conv_id", "turn_idx", "subj", "pred", "obj", "score",
+                "subj_id", "obj_id", "bucket",
+            )
+        )
+        # the broadcast branch keeps ONE corpus-sized cache, the extraction:
+        # the write and the aggregates each re-derive the triples from it with
+        # two broadcast hash probes, cheaper than caching a second copy.  The
+        # fallback branch's joins shuffle, so there the triples are cached
+        if not clustered_write:
+            triples.cache()
+            cached.append(triples)
+
+        edges = edges_of(triples)
+
+        # --- metrics: per-bucket lineage + fixed-width link-score histogram,
+        # collected as one small aggregate and built into rows on the driver
+        counts = lineage_counts(triples, errors, turn_counts)
+        run_buckets = [b for b in range(n_buckets) if b not in set(skipped)]
+
+        # --- materialize: data first, metrics (the commit marker) last, so a
+        # crash mid-write is re-done on resume rather than falsely committed.
+        # In the fallback branch the triples write IS the cache
+        # materialization: the cache sits below the write's repartition, so
+        # one pass computes the join, populates the cache for the downstream
+        # aggregates, and lands the data.
+        def _write_triples() -> None:
+            # bucket co-location for the partitioned write (without it every
+            # task writes a file per bucket — tasks x buckets small files, a
+            # metadata storm at cluster scale):
+            # - broadcast branch (the common case): already physically
+            #   clustered by fuse_write_partitioning's (bucket, wsalt)
+            #   exchange, which extraction and the forced-broadcast joins
+            #   preserved — triples_clustered_frame attaches the per-row
+            #   constants and writes with NO repartition of the triple payload
+            #   (this second full shuffle was the write phase's scaling
+            #   residual);
+            # - fallback (mapping too big to force): the join may shuffle and
+            #   destroy the clustering, so triples_write_frame re-establishes
+            #   it with the salted sub-split repartition (salt decorrelated
+            #   from the bucket hash; lineage/snap attached ABOVE the
+            #   exchange).  Both frames' plan properties are pinned by
+            #   tests/test_write_plan.py.
+            # DYNAMIC partition overwrite on (snap, bucket) makes a
+            # crash-replayed bucket REPLACE its partition instead of appending
+            # duplicates, and leaves other snapshots' partitions untouched.
+            frame = (
+                triples_clustered_frame(triples, snap, n_buckets)
+                if clustered_write
+                else triples_write_frame(triples, snap, n_buckets, par)
+            )
+            (
+                frame.write.partitionBy("snap", "bucket")
+                .option("partitionOverwriteMode", "dynamic")
+                .mode("overwrite")
+                .parquet(triples_path)
+            )
+
+        # which partition hashes does this run contribute, and does the on-disk
+        # graph already include them?  Three cases:
+        # - replayed: every hash already merged (either a no-op resume, or a
+        #   crash-replay between a prior aggregate swap and its metrics commit)
+        #   -> leave the aggregates untouched, re-merging would double-count;
+        # - merge: the graph holds OTHER, disjoint partitions (committed buckets
+        #   of this snapshot on a partial resume, or a previous snapshot on a
+        #   split ingest) -> incremental union-merge;
+        # - fresh: empty/na state -> the graph resets to this run.
+        # Merge and fresh stage both tables and commit them with graph_state
+        # behind one commit point (_commit_graph).
+        run_hashes = {partition_hash(snap, n_buckets, b) for b in run_buckets}
+        included = _read_graph_state(output_dir)
+        replayed = not run_hashes or run_hashes <= included
+        if not replayed and run_hashes & included:
+            raise ValueError(
+                f"graph_state at {output_dir} overlaps this run's partitions "
+                "only partially — the vertex/edge aggregates cannot be merged "
+                "consistently; use a fresh output dir"
+            )
+        merge_mode = (
+            not replayed
+            and bool(included - run_hashes)
+            and os.path.isdir(vertices_path)
+            and os.path.isdir(edges_path)
         )
 
-    # which partition hashes does this run contribute, and does the on-disk
-    # graph already include them?  Three cases:
-    # - replayed: every hash already merged (either a no-op resume, or a
-    #   crash-replay between a prior aggregate swap and its metrics commit)
-    #   -> leave the aggregates untouched, re-merging would double-count;
-    # - merge: the graph holds OTHER, disjoint partitions (committed buckets
-    #   of this snapshot on a partial resume, or a previous snapshot on a
-    #   split ingest) -> incremental union-merge;
-    # - fresh: empty/na state -> the graph resets to this run.
-    # Merge and fresh stage both tables and commit them with graph_state
-    # behind one commit point (_commit_graph).
-    run_hashes = {partition_hash(snap, n_buckets, b) for b in run_buckets}
-    included = _read_graph_state(output_dir)
-    replayed = not run_hashes or run_hashes <= included
-    if not replayed and run_hashes & included:
-        raise ValueError(
-            f"graph_state at {output_dir} overlaps this run's partitions "
-            "only partially — the vertex/edge aggregates cannot be merged "
-            "consistently; use a fresh output dir"
-        )
-    merge_mode = (
-        not replayed
-        and bool(included - run_hashes)
-        and os.path.isdir(vertices_path)
-        and os.path.isdir(edges_path)
-    )
+        # --- concurrent materialization with explicit data dependencies:
+        #   triples write  — reads the extraction cache through the broadcast
+        #                    probes (fallback branch: materializes the triples
+        #                    cache, one pass computing join + cache + data);
+        #   vertices write — depends ONLY on the mapping, so it runs
+        #                    CONCURRENTLY with the triples write;
+        #   lineage counts — one collect of lineage_counts.  Broadcast branch:
+        #                    nothing below it is filled by a write, so it is
+        #                    submitted with the triples write; fallback branch:
+        #                    it reads the triples cache, so it waits for the
+        #                    write that fills it (racing the cache would
+        #                    compute the join twice);
+        #   edges write    — aggregates the triples, started after the triples
+        #                    write (fallback: once the cache is populated);
+        #   metrics append — the commit marker, strictly last: a local
+        #                    relation of the rows built from the lineage counts.
+        # Row counts ride the writes themselves as Observations: zero extra
+        # jobs, zero storage reads — the write that lands the table reports its
+        # own row count (the round-2 footer glob was a driver listing storm on
+        # object stores; the interim distributed count was one extra job per
+        # table).
+        import concurrent.futures as cf
 
-    # --- concurrent materialization with explicit data dependencies:
-    #   triples write  — reads the extraction cache through the broadcast
-    #                    probes (fallback branch: materializes the triples
-    #                    cache, one pass computing join + cache + data);
-    #   vertices write — depends ONLY on the mapping, so it runs
-    #                    CONCURRENTLY with the triples write;
-    #   lineage counts — one collect of lineage_counts.  Broadcast branch:
-    #                    nothing below it is filled by a write, so it is
-    #                    submitted with the triples write; fallback branch:
-    #                    it reads the triples cache, so it waits for the
-    #                    write that fills it (racing the cache would
-    #                    compute the join twice);
-    #   edges write    — aggregates the triples, started after the triples
-    #                    write (fallback: once the cache is populated);
-    #   metrics append — the commit marker, strictly last: a local
-    #                    relation of the rows built from the lineage counts.
-    # Row counts ride the writes themselves as Observations: zero extra
-    # jobs, zero storage reads — the write that lands the table reports its
-    # own row count (the round-2 footer glob was a driver listing storm on
-    # object stores; the interim distributed count was one extra job per
-    # table).
-    import concurrent.futures as cf
+        from pyspark.sql import Observation
 
-    from pyspark.sql import Observation
+        def _observed_write(df: DataFrame, path: str) -> int:
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(path)
+            return int(obs.get["n"])
 
-    def _observed_write(df: DataFrame, path: str) -> int:
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(path)
-        return int(obs.get["n"])
-
-    if merge_mode:
-        # the plans read the prior files their stages replace (an Iceberg
-        # MERGE transaction on a real warehouse)
-        vert_df = merge_vertices(spark.read.parquet(vertices_path), vertices)
-        edge_df = merge_edges(spark.read.parquet(edges_path), edges)
-        graph_hashes = included | run_hashes
-    else:
-        vert_df, edge_df, graph_hashes = vertices, edges, run_hashes
-    vert_stage = f"{vertices_path}.stage-{run_id}"
-    edge_stage = f"{edges_path}.stage-{run_id}"
-
-    t0 = time.monotonic()
-    with cf.ThreadPoolExecutor(max_workers=3) as pool:
-        fc = pool.submit(counts.collect) if clustered_write else None
-        ft = pool.submit(_write_triples)
-        fv = (
-            None
-            if replayed
-            else pool.submit(_observed_write, vert_df, vert_stage)
-        )
-        ft.result()
-        phases["write_triples"] = round(time.monotonic() - t0, 2)
-        if fc is None:
-            fc = pool.submit(counts.collect)
-        t1 = time.monotonic()
-        if replayed:
-            # the aggregates already include every bucket this run
-            # recomputed (a crashed prior attempt merged them before its
-            # metrics commit): re-merging would double-count, so leave
-            # them untouched.
-            n_vertices = _table_rows(spark, vertices_path)
-            n_edges = _table_rows(spark, edges_path)
+        if merge_mode:
+            # the plans read the prior files their stages replace (an Iceberg
+            # MERGE transaction on a real warehouse)
+            vert_df = merge_vertices(spark.read.parquet(vertices_path), vertices)
+            edge_df = merge_edges(spark.read.parquet(edges_path), edges)
+            graph_hashes = included | run_hashes
         else:
-            fe = pool.submit(_observed_write, edge_df, edge_stage)
-            n_vertices, n_edges = fv.result(), fe.result()
-            _commit_graph(output_dir, graph_hashes)
-        metrics = lineage_rows(
-            fc.result(), run_id, snap, n_buckets, run_buckets
-        )
-    phases["write_aggregates"] = round(time.monotonic() - t1, 2)
+            vert_df, edge_df, graph_hashes = vertices, edges, run_hashes
+        vert_stage = f"{vertices_path}.stage-{run_id}"
+        edge_stage = f"{edges_path}.stage-{run_id}"
 
-    # metrics (the commit marker) last: the driver-built rows appended as
-    # one local-relation file
-    t0 = time.monotonic()
-    spark.createDataFrame(metrics, METRICS).coalesce(1).write.mode(
-        "append"
-    ).parquet(metrics_path)
-    n_triples = int(metrics["n_triples"].sum())
-    phases["write_metrics"] = round(time.monotonic() - t0, 2)
-    extracted.unpersist()
-    triples.unpersist()
+        t0 = time.monotonic()
+        with cf.ThreadPoolExecutor(max_workers=3) as pool:
+            fc = pool.submit(counts.collect) if clustered_write else None
+            ft = pool.submit(_write_triples)
+            fv = (
+                None
+                if replayed
+                else pool.submit(_observed_write, vert_df, vert_stage)
+            )
+            ft.result()
+            phases["write_triples"] = round(time.monotonic() - t0, 2)
+            if fc is None:
+                fc = pool.submit(counts.collect)
+            t1 = time.monotonic()
+            if replayed:
+                # the aggregates already include every bucket this run
+                # recomputed (a crashed prior attempt merged them before its
+                # metrics commit): re-merging would double-count, so leave
+                # them untouched.
+                n_vertices = _table_rows(spark, vertices_path)
+                n_edges = _table_rows(spark, edges_path)
+            else:
+                fe = pool.submit(_observed_write, edge_df, edge_stage)
+                n_vertices, n_edges = fv.result(), fe.result()
+                _commit_graph(output_dir, graph_hashes)
+            metrics = lineage_rows(
+                fc.result(), run_id, snap, n_buckets, run_buckets
+            )
+        phases["write_aggregates"] = round(time.monotonic() - t1, 2)
+
+        # metrics (the commit marker) last: the driver-built rows appended as
+        # one local-relation file
+        t0 = time.monotonic()
+        spark.createDataFrame(metrics, METRICS).coalesce(1).write.mode(
+            "append"
+        ).parquet(metrics_path)
+        n_triples = int(metrics["n_triples"].sum())
+        phases["write_metrics"] = round(time.monotonic() - t0, 2)
+    finally:
+        for df in cached:
+            df.unpersist()
     summary = {
         "run_id": run_id,
         "snapshot_id": snap,

@@ -1,14 +1,13 @@
 """SFT export stage — transcripts into packed (prompt, response) training
 rows.
 
-The training-data exit door of the transcript side of the pipeline, the
-way ``jobs/export_kg.py`` is the graph side's: conversations are profiled
-(operators/profile.conversation_profile), degenerate threads dropped,
-assistant turns become (prompt, response) pairs over a bounded context
-window (operators/sft.sft_pairs), and every pair gets its packing
-coordinates for ``capacity``-token training sequences
-(operators/packing.sequence_pack — the two-phase distributed prefix sum,
-no global window).  One parquet table ``pairs/`` comes out, each row
+The training-data exit door of the transcript side of the pipeline:
+conversations are profiled (operators/profile.conversation_profile),
+degenerate threads dropped, assistant turns become (prompt, response)
+pairs over a bounded context window (operators/sft.sft_pairs), and every
+pair gets its packing coordinates for ``capacity``-token training
+sequences (operators/packing.sequence_pack — the two-phase distributed
+prefix sum, no global window).  One parquet table ``pairs/`` comes out, each row
 carrying both the training text and where it lands in the packed stream,
 so a loader can materialize sequence files with a local group-by-seq_id
 pass and no further shuffles.

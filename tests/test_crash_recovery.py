@@ -194,10 +194,13 @@ def test_split_ingest_crash_in_graph_commit_resumes(
         return real(src, dst)
 
     monkeypatch.setattr(pl.os, "replace", failing)
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError):
         pl.build_kg(spark, second, out, n_buckets=4)
     monkeypatch.setattr(pl.os, "replace", real)
-    spark.catalog.clearCache()  # the crashed run's extraction cache
+    # the raised build released its extraction cache
+    assert sc.getPersistentRDDs().size() == before
 
     pl.build_kg(spark, second, out, n_buckets=4)
     report, got = _graph_totals(spark, out)

@@ -1,20 +1,13 @@
-"""Sequential Elo: shared-fold hand cases, batch operator, and the
-streaming state-store face (streaming/elo_stream.py) — snapshot parity
-with batch and state carry across checkpointed availableNow drains."""
-
-import os
+"""Sequential Elo: fold hand cases and the batch operator
+(operators/preference.py)."""
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
 from node_feedparser_spark.operators.preference import (
     _r6,
     elo_fold,
     elo_ratings,
 )
-from node_feedparser_spark.streaming.elo_stream import stream_elo
 
 
 # ---------------------------------------------------------------------------
@@ -88,76 +81,3 @@ def test_batch_matches_fold_per_pool(spark):
             )
     assert len(got) == 5
 
-
-# ---------------------------------------------------------------------------
-# streaming face
-# ---------------------------------------------------------------------------
-
-
-def _write_part(pdf, path):
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-
-
-def _drain(spark, in_dir, ckpt, out_dir):
-    src = spark.readStream.schema(
-        "pool string, seq long, winner string, loser string"
-    ).parquet(in_dir)
-    q = (
-        stream_elo(src)
-        .writeStream.foreachBatch(
-            lambda b, i: b.withColumn("batch", F.lit(int(i)))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out_dir).toPandas()
-    # final snapshot per pool = rows from that pool's highest batch id
-    keep = got.groupby("pool")["batch"].transform("max") == got["batch"]
-    return got[keep].drop(columns=["batch"])
-
-
-def test_stream_snapshot_matches_batch(spark, tmp_path):
-    rows = [
-        ("x", 0, "a", "b"),
-        ("x", 1, "b", "c"),
-        ("x", 2, "a", "c"),
-        ("y", 0, "p", "q"),
-    ]
-    _write_part(_comps_pdf(rows), str(tmp_path / "in" / "p1.parquet"))
-    got = _drain(
-        spark, str(tmp_path / "in"), str(tmp_path / "ck"),
-        str(tmp_path / "out"),
-    )
-    want = elo_ratings(spark.createDataFrame(_comps_pdf(rows))).toPandas()
-    g = got.sort_values(["pool", "player"], ignore_index=True)
-    w = want.sort_values(["pool", "player"], ignore_index=True)
-    pd.testing.assert_frame_equal(g[w.columns], w)
-
-
-def test_stream_state_carries_and_never_double_applies(spark, tmp_path):
-    in_dir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    out = str(tmp_path / "out")
-    first = [("x", 0, "a", "b"), ("x", 1, "a", "b")]
-    second = [("x", 2, "b", "a"), ("x", 3, "a", "c")]
-    _write_part(_comps_pdf(first), os.path.join(in_dir, "p1.parquet"))
-    out1 = _drain(spark, in_dir, ck, out)
-    assert set(out1["player"]) == {"a", "b"}
-    _write_part(_comps_pdf(second), os.path.join(in_dir, "p2.parquet"))
-    out2 = _drain(spark, in_dir, ck, out)
-    # the second drain's snapshot equals one continuous fold of all four
-    st = elo_fold([(s, w, l) for _, s, w, l in first + second])
-    got = {r.player: (r.rating, r.n_games, r.wins) for r in out2.itertuples()}
-    assert got == {
-        p: (st["ratings"][p], st["games"][p], st["wins"][p])
-        for p in st["ratings"]
-    }
-    # games total 8 (2 per comparison over 4 comparisons): nothing from
-    # drain 1 was re-applied in drain 2
-    assert sum(r[1] for r in got.values()) == 8

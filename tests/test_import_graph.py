@@ -11,16 +11,6 @@ import os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "node_feedparser_spark"
 
-# Reached from tests only: their tests still pin them, so they stay until
-# they are deleted together.  The list must match exactly, so it can only
-# shrink — a new orphan fails, and so does an entry that is gone or has
-# become reachable.
-TEST_ONLY = {
-    f"{PKG}.operators.extract_jvm",
-    f"{PKG}.streaming.burst_stream",
-    f"{PKG}.streaming.elo_stream",
-}
-
 
 def _module_name(path: str) -> str:
     rel = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
@@ -68,4 +58,5 @@ def test_every_package_module_is_reachable_from_an_entry_point():
         for m in _imported(path, name) & modules.keys() - seen:
             seen.add(m)
             stack.append((modules[m], m))
-    assert sorted(modules.keys() - seen) == sorted(TEST_ONLY)
+    orphans = sorted(modules.keys() - seen)
+    assert not orphans, orphans
